@@ -14,10 +14,21 @@ Layout:
   sources/    — readers (parquet/csv/json/text) and sink writers
   streaming/  — Structured Streaming twins of the stream operators
   plans/      — declarative pipeline-spec runner + `>>` pipe DSL sugar
+  workerd     — Python worker daemon (pyspark's, importing pyspark unzipped)
 """
-
-from deva_spark.session import get_spark, load_tables, register_views
 
 __version__ = "0.1.0"
 
 __all__ = ["get_spark", "load_tables", "register_views", "__version__"]
+
+
+def __getattr__(name: str):
+    # ``session`` (and with it pyspark) is imported on first use, not with
+    # the package: ``python -m deva_spark.workerd`` imports this package
+    # before it rewrites ``sys.path``, and pyspark must not be imported
+    # until it has.
+    if name in ("get_spark", "load_tables", "register_views"):
+        from deva_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

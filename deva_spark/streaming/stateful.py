@@ -41,8 +41,8 @@ def _welford_zscore_fn(
     out_rows = []
     for pdf in pdfs:
         pdf = pdf.sort_values(["ts", "event_id"])
-        for _, row in pdf.iterrows():
-            x = float(row["value"])
+        for x, eid in zip(pdf["value"].tolist(), pdf["event_id"].tolist()):
+            x = float(x)
             # flag BEFORE updating, against the state built from history
             if n >= 30:
                 var = m2 / (n - 1) if n > 1 else 0.0
@@ -51,7 +51,7 @@ def _welford_zscore_fn(
                     z = (x - mean) / sd
                     if abs(z) >= 3.0:
                         out_rows.append(
-                            (int(key[0]), int(row["event_id"]), x, float(z))
+                            (int(key[0]), int(eid), x, float(z))
                         )
             n += 1
             d = x - mean
@@ -94,11 +94,11 @@ def make_ewma_fn(alpha: float):
         rows = []
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts", "event_id"])
-            for _, row in pdf.iterrows():
-                x = float(row["value"])
+            for x, eid in zip(pdf["value"].tolist(), pdf["event_id"].tolist()):
+                x = float(x)
                 s = x if not started else alpha * x + (1 - alpha) * s
                 started = True
-                rows.append((int(key[0]), int(row["event_id"]), s))
+                rows.append((int(key[0]), int(eid), s))
         state.update((s, started))
         if rows:
             yield pd.DataFrame(rows, columns=["user_id", "event_id", "ewma"])
@@ -131,9 +131,9 @@ def _running_sum_cents_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: Group
     rows = []
     for pdf in pdfs:
         pdf = pdf.sort_values(["ts", "event_id"])
-        for _, row in pdf.iterrows():
-            total += int(row["cents"])
-            rows.append((int(key[0]), int(row["event_id"]), total / 100.0))
+        for cents, eid in zip(pdf["cents"].tolist(), pdf["event_id"].tolist()):
+            total += int(cents)
+            rows.append((int(key[0]), int(eid), total / 100.0))
     state.update((total,))
     if rows:
         yield pd.DataFrame(rows, columns=["user_id", "event_id", "rs"])
@@ -164,9 +164,9 @@ def _running_sum_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState)
     rows = []
     for pdf in pdfs:
         pdf = pdf.sort_values(["ts", "event_id"])
-        for _, row in pdf.iterrows():
-            total += float(row["value"])
-            rows.append((int(key[0]), int(row["event_id"]), round(total, 2)))
+        for x, eid in zip(pdf["value"].tolist(), pdf["event_id"].tolist()):
+            total += float(x)
+            rows.append((int(key[0]), int(eid), round(total, 2)))
     state.update((total,))
     if rows:
         yield pd.DataFrame(rows, columns=["user_id", "event_id", "rs"])

@@ -12,7 +12,8 @@ SF_DIR = os.environ.get("DEVA_SPARK_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("deva-spark-tests", cpus=8)
+    # the CPUs this machine gives the suite; 8 where that is not set
+    s = get_spark("deva-spark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
 
 

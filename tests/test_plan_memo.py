@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from deva_spark import queries as Q
-from deva_spark.queries._infra import _PLAN_CACHE_ATTR
+from deva_spark.queries._infra import _PLAN_CACHE_ATTR, _jobs_submitted
 from deva_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -26,6 +26,16 @@ def spark():
 
 def _cache(spark):
     return getattr(spark, _PLAN_CACHE_ATTR, {})
+
+
+def test_jobs_submitted_reads_the_dag_scheduler(spark):
+    # the pure-plan guard reads an internal DAGScheduler counter and
+    # degrades to never memoizing (None) if it moves: pin that it is
+    # still there and counts jobs
+    before = _jobs_submitted(spark)
+    assert isinstance(before, int)
+    spark.range(3).count()
+    assert _jobs_submitted(spark) > before
 
 
 def test_memoized_query_identical_results_fresh_node(spark):
