@@ -1148,9 +1148,10 @@ def x122(spark, sf):
         nparts=scan_partitions(spark, sf, "documents"),
     )
     imgs = mmod.synthesize_group_images(docs)
+    hashes = ih.image_hashes(imgs, id_col="image_id", hashes=("dhash",))
     ipairs = (
         ih.hamming_neardup_pairs(
-            ih.image_hashes(imgs, id_col="image_id", hashes=("dhash",)),
+            hashes,
             "dhash",
             id_col="image_id",
             max_distance=3,
@@ -1163,11 +1164,18 @@ def x122(spark, sf):
         .select("id_a", "id_b")
         .withColumn("modality", F.lit("text"))
     )
-    # persist: allp feeds BOTH the component resolution and the
-    # modality-stats aggregation — without it the whole image lineage
-    # (PNG synthesis -> hashing -> banded join) re-executes per
-    # consumer (review r14). Synopsis-small: pair rows only.
-    allp = tpairs.unionByName(ipairs).persist()
+    # materialized once: allp feeds BOTH the component resolution and
+    # the modality-stats aggregation — without it the whole image
+    # lineage (PNG synthesis -> hashing -> banded join) re-executes per
+    # consumer (review r14). Synopsis-small: pair rows only. A local
+    # checkpoint, not persist(): a persisted plan stays in the session's
+    # CacheManager and the next x122 would read this run's pairs back,
+    # while the checkpoint's blocks belong to this result alone and the
+    # ContextCleaner frees them once the result is dropped.
+    allp = tpairs.unionByName(ipairs).localCheckpoint(eager=True)
+    # the checkpoint holds the pairs, so the hash synopsis that
+    # hamming_neardup_pairs cached for its banded join is spent
+    hashes.unpersist()
     assign = graphs.canonical_assignments(
         allp.select("id_a", "id_b").distinct()
     )

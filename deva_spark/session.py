@@ -19,6 +19,23 @@ archive's directory: 0.14-0.21 s of CPU per Python task, most of the
 worker CPU of a small streaming micro-batch. The daemon imports pyspark
 from the unpacked ``$SPARK_HOME/python`` tree instead (keeping the zip
 where there is none) and leaves the rest of Spark's daemon untouched.
+
+Compiled generated code is kept for the whole session. Spark caches the
+classes Janino compiles from whole-stage and expression codegen in one
+JVM-wide LRU cache, ``spark.sql.codegen.cache.maxEntries``, 100 entries by
+default. The registry re-issues the same plans every pass, but one pass
+over q01-q35 alone generates 215-238 distinct classes, so the default
+cache evicted each class before its next use and every warm pass
+recompiled ~230 of them. Measured in one session at sf0.001: staging
+every artifact generates ~270 classes and one pass over all 160 entries
+~1 340 more, ~1 610 in all. :data:`CODEGEN_CACHE_MAX_ENTRIES` leaves
+about 2.5x headroom over that working set. It stays finite: ``0``
+disables the cache, and an unbounded one would grow without limit under
+ad-hoc SQL. Each entry holds roughly 25-30 KB of driver heap (the
+generated source and the class loader's bytecode). The conf is static:
+a session built without :func:`get_spark` keeps Spark's default of 100,
+and :func:`ensure_session_confs` cannot raise it at runtime.
+:func:`codegen_stats` reads the JVM-wide compile counters.
 """
 
 from __future__ import annotations
@@ -44,6 +61,9 @@ TABLES = (
 # the TPC-H-ish ratios (region/nation are constant-size; supplier/part grow
 # slowly). customer/orders/lineitem/events are fact-scale: never broadcast.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
+
+#: Bound of Spark's compiled-class cache; see the module docstring.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
 
 #: Directory holding the ``deva_spark`` package, for the Python workers.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,6 +102,11 @@ def get_spark(app_name: str = "deva-spark", cpus: int | None = None) -> SparkSes
         # workers' path so the daemon starts from any working directory.
         .config("spark.python.daemon.module", "deva_spark.workerd")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Static: holds the registry's generated classes across passes
+        # (see the module docstring).
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
     )
     # ad-hoc experiment overrides: "k1=v1;k2=v2"
     for kv in os.environ.get("DEVA_EXTRA_CONF", "").split(";"):
@@ -89,6 +114,20 @@ def get_spark(app_name: str = "deva-spark", cpus: int | None = None) -> SparkSes
             k, v = kv.split("=", 1)
             builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """JVM-wide codegen counters since the JVM started: classes Janino
+    compiled (a cache hit compiles nothing) and the time spent on them.
+    In local mode the executors share the driver's JVM, so their
+    compiles count too. Callers take differences between two reads."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return {
+        "classes_compiled": count.METRIC_COMPILATION_TIME().getCount(),
+        "compile_ms": round(gen.compileTime() / 1e6, 1),
+    }
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -324,8 +324,11 @@ def admin_panel(
     bounded snapshots, never in the data plane):
 
     - ``/json/runtime`` — Spark version/master/parallelism + active
-      STREAMING QUERIES (name, id, last progress rates) + cached-table
-      names: the monitor page.
+      STREAMING QUERIES (name, id, last progress rates) + the JVM's
+      generated-code compile counters (``codegen``:
+      classes compiled and compile ms; a count that keeps rising on a
+      repeating pipeline means the class cache evicts): the monitor
+      page.
     - ``/json/config`` — the :class:`~deva_spark.sources.config
       .ConfigStore` contents with sensitive values MASKED (the admin
       config view never leaks credentials).
@@ -336,6 +339,8 @@ def admin_panel(
     Returns name -> URL for everything registered."""
 
     def runtime() -> dict:
+        from deva_spark.session import codegen_stats
+
         sc = spark.sparkContext
         streams = []
         for q in spark.streams.active:
@@ -355,6 +360,7 @@ def admin_panel(
             "defaultParallelism": sc.defaultParallelism,
             "applicationId": sc.applicationId,
             "streams": streams,
+            "codegen": codegen_stats(spark),
         }
 
     def tables() -> list[dict]:

@@ -30,26 +30,23 @@ EVENTS_SCHEMA = (
 )
 
 
-def stage_event_chunks(
-    spark: SparkSession, sf_dir: str, chunks: int = 4, out_dir: str | None = None
+def _stage_chunks(
+    df: DataFrame, chunks: int, order: list[str], out_dir: str
 ) -> str:
-    """Replay staging (``DBStream.replay`` analog): split the events table
-    into ``chunks`` parquet files in (ts, event_id) order so the file-stream
-    source discovers them as successive micro-batches.
+    """Write ``df`` as ``chunks`` parquet files, range-partitioned and
+    sorted on ``order``, for a file-stream source to replay.
 
-    Fully distributed: ``repartitionByRange`` buckets by event time (range
-    partition i holds the i-th time slice) and each task writes its own
+    Fully distributed: ``repartitionByRange`` buckets on ``order`` (range
+    partition i holds the i-th slice) and each task writes its own
     sorted file — the driver never materializes data. The only driver work
     is metadata: renaming part files to zero-padded chunk names IN RANGE
     ORDER and bumping mtimes monotonically, so the file-stream source's
-    discovery order (mtime, then path) equals event-time order."""
+    discovery order (mtime, then path) equals ``order``."""
     import time
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_stream_")
-    ev = read_table(spark, sf_dir, "events")
     (
-        ev.repartitionByRange(chunks, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
+        df.repartitionByRange(chunks, *order)
+        .sortWithinPartitions(*order)
         .write.mode("overwrite")
         .parquet(out_dir)
     )
@@ -62,6 +59,18 @@ def stage_event_chunks(
         os.rename(os.path.join(out_dir, name), dst)
         os.utime(dst, (t0 + i, t0 + i))
     return out_dir
+
+
+def stage_event_chunks(
+    spark: SparkSession, sf_dir: str, chunks: int = 4, out_dir: str | None = None
+) -> str:
+    """Replay staging (``DBStream.replay`` analog): split the events table
+    into ``chunks`` parquet files in (ts, event_id) order so the file-stream
+    source discovers them as successive micro-batches (see
+    :func:`_stage_chunks`)."""
+    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_stream_")
+    ev = read_table(spark, sf_dir, "events")
+    return _stage_chunks(ev, chunks, ["ts", "event_id"], out_dir)
 
 
 DOCS_SCHEMA = (
@@ -82,27 +91,9 @@ def stage_doc_chunks(
     replays the batch arriving incrementally. Same anatomy as
     :func:`stage_event_chunks`: range-partitioned distributed write,
     driver touches only file metadata (rename + monotonic mtimes)."""
-    import time
-
     out_dir = out_dir or tempfile.mkdtemp(prefix="deva_docstream_")
     docs = read_table(spark, sf_dir, "documents").filter(F.expr(where))
-    (
-        docs.repartitionByRange(chunks, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    parts = sorted(
-        f
-        for f in os.listdir(out_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    t0 = time.time() - len(parts)
-    for i, name in enumerate(parts):
-        dst = os.path.join(out_dir, f"chunk_{i:04d}.parquet")
-        os.rename(os.path.join(out_dir, name), dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    return out_dir
+    return _stage_chunks(docs, chunks, ["doc_id"], out_dir)
 
 
 def docs_file_stream(
@@ -406,28 +397,11 @@ def stage_emb_chunks(
     """Embedding-arrival staging (the stage_doc_chunks pattern on the
     vector side): split ``embeddings`` rows with ``vec_id >= min_id``
     into ``chunks`` files in vec_id order for file-stream replay."""
-    import time
-
     out_dir = out_dir or tempfile.mkdtemp(prefix="deva_emb_stream_")
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") >= min_id
     )
-    (
-        emb.repartitionByRange(chunks, "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(out_dir)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    t0 = time.time() - len(parts)
-    for i, name in enumerate(parts):
-        dst = os.path.join(out_dir, f"chunk_{i:04d}.parquet")
-        os.rename(os.path.join(out_dir, name), dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    return out_dir
+    return _stage_chunks(emb, chunks, ["vec_id"], out_dir)
 
 
 def emb_file_stream(

@@ -194,3 +194,20 @@ def test_image_twins_only_matches_filtered_synthesis(spark):
     assert got == want and len(got) == 4
     with pytest.raises(ValueError, match="twins_only"):
         mm.synthesize_doc_images(docs, twins_only=True)
+
+
+def test_x122_leaves_no_cache_entry(spark, sf_dir, tmp_path, monkeypatch):
+    # x122 must not keep its pairs or hash synopsis in the session's
+    # CacheManager: a cached plan would hand the next x122 run this
+    # run's results. The fresh artifact root gives the pair plan a scan
+    # path no earlier test cached.
+    from deva_spark import queries as Q
+
+    monkeypatch.setenv("DEVA_ARTIFACT_DIR", str(tmp_path))
+    Q.stage_artifacts(spark, sf_dir, ["jaccard_pairs"])
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    df = Q.SPARK_QUERIES["x122_multimodal_dedup_clusters"](spark, sf_dir)
+    assert df.count() > 0
+    del df
+    assert cm.numCachedEntries() == before

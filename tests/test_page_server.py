@@ -3,6 +3,7 @@ round-trips over the stdlib server on an ephemeral port."""
 
 import json
 import socket
+import uuid
 import urllib.request
 
 import pytest
@@ -92,6 +93,11 @@ def test_admin_panel_runtime_config_tables(server, spark, tmp_path):
     assert rt["version"] == spark.version
     assert rt["master"].startswith("local")
     assert isinstance(rt["streams"], list)
+    # the counters move with compiles: a fresh projection compiles a class
+    spark.range(2).selectExpr(f"id * {uuid.uuid4().int % 10**9} AS v").collect()
+    rt2 = json.loads(_get(urls["runtime"]))
+    assert rt2["codegen"]["classes_compiled"] > rt["codegen"]["classes_compiled"]
+    assert rt2["codegen"]["compile_ms"] > rt["codegen"]["compile_ms"]
     cfg = json.loads(_get(urls["config"]))
     assert cfg["llm.base_url"] == "http://h/v1"
     assert "sk-secret-value" not in json.dumps(cfg)  # masked

@@ -13,6 +13,15 @@ sink replaces the bench's ``toPandas`` so the number isolates the
 computation (bench numbers stay the comparison record; these are the
 optimization loop's numbers). ``--topandas`` times the bench action
 instead for an apples-to-bench check.
+
+Each timed run also prints the classes Janino compiled during it
+(``compiled=``). The session caches generated classes, so a nonzero
+count on a repeat means the cache evicted them. Repeating one query in
+isolation cannot show eviction caused by OTHER queries: a suite that
+interleaves many queries can overflow the cache where this loop never
+does, so a suite-level recompile cost is invisible here. Read the
+counts from a run over the whole mix (``/json/runtime``'s ``codegen``
+or :func:`deva_spark.session.codegen_stats` around each pass) for that.
 """
 
 from __future__ import annotations
@@ -24,7 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from deva_spark.session import get_spark  # noqa: E402
+from deva_spark.session import codegen_stats, get_spark  # noqa: E402
 from deva_spark import queries as Q  # noqa: E402
 
 
@@ -64,15 +73,20 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
 
         action()  # warm-up, untimed
-        times = []
+        times, compiled = [], []
         for _ in range(args.runs):
             spark.catalog.clearCache()
+            c0 = codegen_stats(spark)["classes_compiled"]
             t0 = time.perf_counter()
             action()
             times.append(round(time.perf_counter() - t0, 3))
+            compiled.append(codegen_stats(spark)["classes_compiled"] - c0)
         times_s = sorted(times)
         med = times_s[len(times_s) // 2]
-        print(f"{name}: median={med}s runs={times} load={os.getloadavg()[0]:.1f}")
+        print(
+            f"{name}: median={med}s runs={times} compiled={compiled} "
+            f"load={os.getloadavg()[0]:.1f}"
+        )
         if not args.no_plan:
             plan = fn(spark, args.sf)._sc._jvm.PythonSQLUtils.explainString(
                 fn(spark, args.sf)._jdf.queryExecution(), "formatted"
