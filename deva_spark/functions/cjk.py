@@ -176,7 +176,3 @@ def cjk_bigram_tokens(texts: pd.Series) -> pd.Series:
 
 def tokens(text_col: Column) -> Column:
     return tokenize_cjk(text_col)
-
-
-def bigram_tokens(text_col: Column) -> Column:
-    return cjk_bigram_tokens(text_col)

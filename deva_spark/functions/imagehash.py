@@ -36,25 +36,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from deva_spark.functions.multimodal import decode_image, resize_image
 
-#: persisted (id, hash) synopses created by :func:`hamming_neardup_pairs`
-#: (and the videofp pair builders, which share this registry), released
-#: by :func:`release_synopsis_cache` — the vectors._NEARDUP_CACHE
-#: discipline (ADVICE r14: plan-builder persists with no release handle
-#: accumulate cached synopses in a long-lived session until clearCache).
-_SYNOPSIS_CACHE: list[DataFrame] = []
-
-
-def release_synopsis_cache() -> int:
-    """Unpersist every hash synopsis the pair builders cached; returns
-    how many were released. Safe any time after the caller has
-    materialized its result."""
-    n = 0
-    while _SYNOPSIS_CACHE:
-        _SYNOPSIS_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
 def _dct_basis(n: int) -> np.ndarray:
     k = np.arange(n)[:, None]
     i = np.arange(n)[None, :]
@@ -262,15 +243,12 @@ def hamming_neardup_pairs(
     # unpersisted lineage runs the decode+hash pass once PER BRANCH —
     # measured 2x the whole tier at bench scale (plans/r14/x115: 4
     # MapInPandas + 2 scans -> 2 + 1). The synopsis is (id, hash) rows —
-    # KBs per million images — and the eager count() is what guarantees
-    # the two join stages read cache instead of racing to populate it.
-    # Deliberately persisted for the result's lifetime (the simhash
-    # fingerprint precedent); registered in _SYNOPSIS_CACHE so library
-    # callers looping many resolutions can release_synopsis_cache()
-    # instead of a blanket clearCache (ADVICE r14).
-    hashes = hashes.persist()
-    hashes.count()
-    _SYNOPSIS_CACHE.append(hashes)
+    # KBs per million images. An eager local checkpoint, not persist():
+    # a persisted plan stays in the session's CacheManager, so the next
+    # caller over the same plan would read this run's hashes back. The
+    # checkpoint's blocks belong to this result alone and the
+    # ContextCleaner frees them once the result is dropped.
+    hashes = hashes.localCheckpoint(eager=True)
     sides = _banded(hashes, hash_col, id_col, max_distance)
     a, b = sides.alias("a"), sides.alias("b")
     cand = a.join(

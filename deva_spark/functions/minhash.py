@@ -40,26 +40,6 @@ BAND_SIZE = 3  # => 4 bands; collision prob for jaccard s: 1-(1-s^3)^4
 M61 = (1 << 61) - 1  # Mersenne prime modulus for the permutation family
 
 
-#: persisted signature/shingle-index DataFrames created by the
-#: unstaged paths of :func:`near_duplicates`, :func:`ngram_jaccard_pairs`
-#: and :func:`incremental_shingle_overlap`, released by
-#: :func:`release_sig_cache` — the vectors._NEARDUP_CACHE /
-#: substring._INDEX_CACHE discipline (r12 review: looping sessions
-#: otherwise accumulate unreachable corpus-sized cached blocks).
-_SIG_CACHE: list[DataFrame] = []
-
-
-def release_sig_cache() -> int:
-    """Unpersist every signature/shingle index the unstaged paths
-    cached; returns how many were released. Safe any time after the
-    caller has materialized its result."""
-    n = 0
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
 def minhash_signature(text: Column, num_hashes: int = NUM_HASHES) -> Column:
     """array<long> MinHash signature — pure-column-expression twin of the
     pandas UDF (used for parity testing; the UDF is the production path).
@@ -302,16 +282,15 @@ def near_duplicates(
     ``sigs``: a precomputed ``(doc_id, sig)`` signature table (the
     build-once-query-many artifact — signatures depend only on the text,
     so one table serves every consumer; the caller owns its persistence).
-    When omitted, signatures are computed and persisted here."""
+    When omitted, signatures are computed and checkpointed here."""
     if sigs is None:
-        # Persist the signatures: they feed the band explosion AND both
+        # Checkpoint the signatures: they feed the band explosion AND both
         # sides of the verify join — without this the 12×|shingles| MD5
-        # evaluation runs three times (observed 191 s → ~8 s at sf0.1). At
-        # cluster scale this is a materialized signature table (write
-        # once, join many).
-        sigs = signatures(docs, id_col, text_col).persist()
-        sigs.count()  # eager: referenced by bands + both verify-join sides
-        _SIG_CACHE.append(sigs)
+        # evaluation runs three times (observed 191 s → ~8 s at sf0.1).
+        # The blocks belong to the result and the ContextCleaner frees
+        # them once it is dropped. At cluster scale this is a
+        # materialized signature table (write once, join many).
+        sigs = signatures(docs, id_col, text_col).localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(sigs)
     return _verify_candidates(cands, sigs, min_matches)
 
@@ -339,8 +318,11 @@ def ngram_jaccard_pairs(
     EXACTLY against the full shingle sets. Precision stays exact; recall
     misses only pairs whose overlap is entirely high-df shingles.
     """
-    # Persisted: the exploded shingle index feeds the self-join twice plus
-    # the per-doc size aggregate. The join key is the 64-bit xxhash of the
+    # Eagerly checkpointed: the plan references the exploded shingle
+    # index four times (both join sides + two size lookups), and without
+    # a barrier one job races to compute the subtree 4× (observed 8 s vs
+    # 1 s). Cluster-scale equivalent: stage the shingle index to a table
+    # once, then join against it. The join key is the 64-bit xxhash of the
     # shingle, not the string itself: the shuffle moves 8-byte keys instead
     # of full n-grams (collision probability ~(distinct shingles)^2 / 2^64 —
     # negligible), which is what makes this join survive a corpus-scale run.
@@ -355,15 +337,8 @@ def ngram_jaccard_pairs(
             F.explode(distinct_word_shingles_udf(F.col(text_col))).alias("s"),
         )
         .select("doc_id", F.xxhash64("s").alias("sh"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    _SIG_CACHE.append(sh)
-    # Materialize the cache eagerly: the plan references `sh` four times
-    # (both join sides + two size lookups); without a barrier one job races
-    # to compute the subtree 4× before any partition lands in cache
-    # (observed 8 s vs 1 s). Cluster-scale equivalent: stage the shingle
-    # index to a table once, then join against it.
-    sh.count()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("id_a"), "sh")
     b = sh.select(F.col("doc_id").alias("id_b"), "sh")
@@ -525,11 +500,10 @@ def incremental_shingle_overlap(
     |A∩B| exact, but per-doc sizes must then come from the FULL index,
     not the pruned rows).
     """
+    # batch-sized; feeds cross join, self join, and sizes
     n = new_index.select(
         F.col(id_col).alias("doc_id"), F.col(sh_col).alias("sh")
-    ).persist()
-    n.count()  # batch-sized; feeds cross join, self join, and sizes
-    _SIG_CACHE.append(n)
+    ).localCheckpoint(eager=True)
     o = old_index.select(
         F.col(id_col).alias("doc_id"), F.col(sh_col).alias("sh")
     )

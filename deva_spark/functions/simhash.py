@@ -268,13 +268,12 @@ def near_duplicates(
     ``fps``: a precomputed ``(doc_id, fp)`` fingerprint table (the
     build-once artifact — fingerprints are per-doc functions of the
     text, the doc_sigs pattern; the caller owns its persistence). When
-    omitted, fingerprints are computed and persisted here.
+    omitted, fingerprints are computed and checkpointed here.
     """
     if fps is None:
-        # Persisted: the pandas-UDF fingerprint pass feeds the chunk
-        # explosion and both join sides; compute it once.
-        fps = fingerprints(docs, id_col, text_col).persist()
-        fps.count()  # eager: chunk explosion + both join sides
+        # Eager checkpoint: the pandas-UDF fingerprint pass feeds the
+        # chunk explosion and both join sides; compute it once.
+        fps = fingerprints(docs, id_col, text_col).localCheckpoint(eager=True)
     chunks = chunk_keys(fps, banding_chunks(max_hamming))
     a = chunks.select(
         F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"), "ci", "cv"

@@ -45,27 +45,6 @@ from pyspark.sql import functions as F
 
 from deva_spark.functions.text import words
 
-#: persisted window-index DataFrames created by the unstaged paths of
-#: :func:`substring_dup_pairs` / :func:`remove_duplicate_runs`, released
-#: by :func:`release_index_cache` — the vectors._NEARDUP_CACHE
-#: discipline (r12 review: a long-lived session looping unstaged calls
-#: otherwise accumulates unreachable corpus-sized cached blocks until
-#: eviction pressure; the staged `hashes=`/`positions=` paths never
-#: persist here).
-_INDEX_CACHE: list[DataFrame] = []
-
-
-def release_index_cache() -> int:
-    """Unpersist every window index the unstaged paths cached; returns
-    how many were released. Safe any time after the caller has
-    materialized its result."""
-    n = 0
-    while _INDEX_CACHE:
-        _INDEX_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
 def window_runs(text: Column, window: int) -> Column:
     """Array of all length-``window`` consecutive word runs of ``text``
     (lowercased, whitespace-split), each joined with single spaces —
@@ -132,14 +111,14 @@ def substring_dup_pairs(
     if hashes is not None:
         sh = hashes
     else:
-        # persist + eager barrier: the plan references the index on both
-        # join sides (plus the df_cap aggregate) — without a barrier the
+        # eager checkpoint: the plan references the index on both join
+        # sides (plus the df_cap aggregate) — without a barrier the
         # window-explode subtree recomputes per reference (the
         # ngram_jaccard_pairs lesson). Cluster path: stage the index to
         # a table (the `subwin8` artifact) and pass ``hashes=``.
-        sh = window_hashes(docs, id_col, text_col, window).persist()
-        sh.count()
-        _INDEX_CACHE.append(sh)
+        sh = window_hashes(docs, id_col, text_col, window).localCheckpoint(
+            eager=True
+        )
     if df_cap is not None:
         rare = (
             sh.groupBy("wh")
@@ -465,7 +444,7 @@ def remove_duplicate_runs(
 
     ``positions``: a pre-staged :func:`window_hash_positions` table
     (the cluster path; it is also used twice here, so the unstaged
-    build persists it with an eager barrier).
+    build checkpoints it eagerly).
     """
     from pyspark.sql import Window
 
@@ -474,9 +453,9 @@ def remove_duplicate_runs(
     else:
         # referenced twice (mask aggregate + cover join): barrier, or
         # the window-explode subtree recomputes per reference
-        p = window_hash_positions(docs, id_col, text_col, window).persist()
-        p.count()
-        _INDEX_CACHE.append(p)
+        p = window_hash_positions(
+            docs, id_col, text_col, window
+        ).localCheckpoint(eager=True)
     mask = (
         p.groupBy("wh")
         .agg(
@@ -535,8 +514,6 @@ def remove_duplicate_runs(
             F.array_join(kept, " ").alias("clean_text"),
         )
     )
-    # when the index was built here, it stays persisted for the job that
-    # executes this plan (same ownership contract as near_duplicates)
     return out
 
 

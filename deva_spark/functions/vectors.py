@@ -339,22 +339,6 @@ def lsh_topk_onepass(
     )
 
 
-#: persisted signature DFs produced by :func:`cosine_neardup_pairs`,
-#: released by :func:`release_neardup_cache`
-_NEARDUP_CACHE: list[DataFrame] = []
-
-
-def release_neardup_cache() -> int:
-    """Unpersist every signatures DataFrame :func:`cosine_neardup_pairs`
-    cached; returns how many were released. Safe to call any time after
-    the caller has materialized its result."""
-    n = 0
-    while _NEARDUP_CACHE:
-        _NEARDUP_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
 def _pair_cos_udf():
     """Vectorized pair-dot rescore: one numpy einsum per Arrow batch
     instead of an interpreted higher-order-function fold per pair (HOFs
@@ -422,7 +406,7 @@ def cosine_neardup_pairs(
     :func:`neardup_base` — norms and bucket signatures are per-vector
     functions of the embedding, the doc_sigs staging pattern; the
     caller owns its persistence). When omitted it is computed and
-    persisted here.
+    checkpointed here.
 
     Scale shape: candidates come from a multi-table hyperplane-LSH bucket
     SELF-join (same machinery as :func:`lsh_bucketed_topk` — the shuffle
@@ -432,18 +416,14 @@ def cosine_neardup_pairs(
     recall); precision is exact. The deterministic planes let the DuckDB
     oracle reproduce candidate generation bit-for-bit.
 
-    Caching contract: the returned plan references an eagerly-persisted
-    signatures DataFrame (it feeds both candidate sides + the rescore).
-    Call :func:`release_neardup_cache` once the result is materialized —
-    repeated invocations in a long-lived session otherwise accumulate
-    cached blocks until eviction pressure (ADVICE r2).
+    The bucket table built here is an eager local checkpoint (it feeds
+    both candidate sides + the rescore); its blocks belong to the result
+    and are freed once the result is dropped.
     """
     if base is None:
         base = neardup_base(
             vectors, n_planes, n_tables, dim, id_col, vec_col
-        ).persist()
-        base.count()  # eager: referenced by both candidate sides + rescore
-        _NEARDUP_CACHE.append(base)
+        ).localCheckpoint(eager=True)
     buckets = base.select("vid", F.posexplode("bs").alias("t", "b"))
     cand = (
         buckets.alias("a")

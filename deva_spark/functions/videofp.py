@@ -37,7 +37,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from deva_spark.functions import imagehash
 from deva_spark.functions.imagehash import dhash64
 from deva_spark.functions.multimodal import decode_avi
 
@@ -216,12 +215,10 @@ def video_neardup_pairs(
     # stage (AVI decode + per-frame dhash — for the registry tiers,
     # video SYNTHESIS too), and an unmaterialized lineage runs that
     # pass once PER BRANCH (plans/r14/x118: 4 MapInPandas + 2 scans
-    # before, 2 + 1 after). (id, frame_idx, dhash) rows — tiny; the
-    # eager count() guarantees both join stages read cache. Registered
-    # in the shared release registry (ADVICE r14).
-    frame_hashes = frame_hashes.persist()
-    frame_hashes.count()
-    imagehash._SYNOPSIS_CACHE.append(frame_hashes)
+    # before, 2 + 1 after). (id, frame_idx, dhash) rows — tiny; an
+    # eager local checkpoint, freed with the result (the
+    # imagehash.hamming_neardup_pairs contract).
+    frame_hashes = frame_hashes.localCheckpoint(eager=True)
     sides = _frame_banded(frame_hashes, id_col, frame_col, max_distance)
     return _aligned_pairs(
         _frame_candidates(sides, sides, ordered=True),
@@ -252,9 +249,7 @@ def video_neardup_unordered(
     shuffle shape: banded (band, chunk) keys, one aggregation."""
     _validate(max_distance, min_shared, "min_shared")
     # same materialize-before-self-join contract as video_neardup_pairs
-    frame_hashes = frame_hashes.persist()
-    frame_hashes.count()
-    imagehash._SYNOPSIS_CACHE.append(frame_hashes)
+    frame_hashes = frame_hashes.localCheckpoint(eager=True)
     sides = _frame_banded(frame_hashes, id_col, frame_col, max_distance)
     matches = _verified_matches(
         _frame_candidates(sides, sides, ordered=True), max_distance

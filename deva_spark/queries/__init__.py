@@ -38,6 +38,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from deva_spark.queries._infra import (  # noqa: F401 -- public re-exports
+    ARTIFACT_BUILDERS,
+    ARTIFACT_STAGERS,
     ORACLE_SQL,
     SPARK_QUERIES,
     query,

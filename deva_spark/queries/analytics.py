@@ -15,16 +15,14 @@ from deva_spark.operators import aggregates as agg
 from deva_spark.operators import graphs
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from deva_spark.session import read_parquet
 from deva_spark.queries._infra import (
     ORACLE_SQL,
-    _pr_raw_edges,
+    _shared_artifact,
+    _shared_artifact_path,
     _shingle5_hashes,
     _t,
     query,
-    staged_artifact_path,
 )
-from deva_spark.queries.similarity import _staged_events
 
 @query(
     "x60_kmv_distinct_users",
@@ -104,12 +102,11 @@ def x61(spark, sf):
     # Two PageRank iterations over the customer<->supplier bipartite
     # graph via operators.graphs.pagerank (damping 0.85, teleport 0.15,
     # rank scale 1e12, ALL-INTEGER arithmetic so ranks are bit-identical
-    # across engines and partitionings). The operator stages the
-    # symmetrized edge list once (persist here; a src-bucketed table at
-    # cluster scale), computes out-degrees with a map-side-combining
-    # groupBy, and joins a node-level share table per iteration — the
-    # orders⋈lineitem base join evaluates exactly once, not once per
-    # iteration.
+    # across engines and partitionings), over the operator's documented
+    # cluster path: the pre-staged DENORM edge table (each row carries
+    # src's outdeg, stage=None) — the base join, distinct, symmetrize
+    # and degree pass all ran at staging, and the degree join disappears
+    # from the per-run plan.
     # Node ids stay NUMERIC through every shuffle (custkey*2 even,
     # suppkey*2+1 odd — disjoint by parity): the join, distinct, degree
     # agg and both propagation joins hash/compare bigints, and only the
@@ -118,29 +115,19 @@ def x61(spark, sf):
     # measured ~2x faster than concat-first at sf0.1 (string shuffle
     # keys cost hash+compare per byte AND bigger exchange payloads; at
     # 100 TB the payload term dominates).
-    staged = staged_artifact_path(sf, "pr_edges")
-    if staged:
-        # the operator's documented cluster path: pre-staged DENORM
-        # edge table (each row carries src's outdeg), stage=None — the
-        # base join/distinct/symmetrize/degree pass all ran at staging,
-        # and the degree join disappears from the per-run plan
-        ranks = graphs.pagerank(
-            read_parquet(spark, staged),
-            n_iter=2,
-            symmetrize=False,
-            stage=None,
-            outdeg_col="outdeg",
-            # the staged edge table is pre-SYMMETRIZED (built from e0's
-            # explode of both directions), so every node appears as a
-            # dst and the in-degree-0 source completion is provably
-            # vacuous — skip its edge-table distinct (r11: the default
-            # completion doubled this query's sf1 time)
-            complete_sources=False,
-        )
-    else:
-        ranks = graphs.pagerank(
-            _pr_raw_edges(spark, sf), n_iter=2, symmetrize=True
-        )
+    ranks = graphs.pagerank(
+        _shared_artifact(spark, sf, "pr_edges"),
+        n_iter=2,
+        symmetrize=False,
+        stage=None,
+        outdeg_col="outdeg",
+        # the staged edge table is pre-SYMMETRIZED (built from e0's
+        # explode of both directions), so every node appears as a dst
+        # and the in-degree-0 source completion is provably vacuous —
+        # skip its edge-table distinct (r11: the default completion
+        # doubled this query's sf1 time)
+        complete_sources=False,
+    )
     return ranks.select(
         F.expr(
             "concat(CASE WHEN node % 2 = 0 THEN 'c' ELSE 's' END,"
@@ -219,7 +206,7 @@ def x63(spark, sf):
         tumbling_counts,
     )
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     counts = run_available_now(
         tumbling_counts(s), "x63_drain", output_mode="complete", state_partitions=8
     ).select(F.col("w").alias("hr"), "event_type", "cnt")
@@ -433,7 +420,7 @@ def x69(spark, sf):
     from deva_spark.streaming.stateful import streaming_funnel
     from deva_spark.streaming.twin import events_file_stream, run_available_now
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     conv = run_available_now(
         streaming_funnel(s, _FUNNEL_STEPS), "x69_drain", output_mode="append", state_partitions=8
     )
@@ -502,7 +489,7 @@ def x71(spark, sf):
     # The cohort join + offset counts run as the batch epilogue.
     from deva_spark.streaming.twin import events_file_stream, run_available_now
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     days_stream = s.select(
         "user_id", F.to_date("ts").alias("_d")
     ).dropDuplicates(["user_id", "_d"])

@@ -16,17 +16,14 @@ from deva_spark.operators import windows
 from deva_spark.operators.aggregates import money_sum
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from deva_spark.session import read_parquet
 from deva_spark.queries._infra import (
     _jaccard_pairs,
     _shared_artifact,
+    _shared_artifact_path,
     _shingle5_hashes,
     _t,
     query,
-    stage_artifacts,
-    staged_artifact_path,
 )
-from deva_spark.queries.similarity import _staged_events
 
 @query(
     "x33_streaming_tumbling",
@@ -43,7 +40,7 @@ def x33(spark, sf):
     # twin promoted to the driver contract.
     from deva_spark.streaming.twin import events_file_stream, run_available_now, tumbling_counts
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     return run_available_now(tumbling_counts(s), "x33_drain", output_mode="complete", state_partitions=8)
 
 
@@ -63,7 +60,7 @@ def x34(spark, sf):
     # streaming session_window drain vs the batch lag-based oracle.
     from deva_spark.streaming.twin import events_file_stream, run_available_now, session_counts
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     return run_available_now(session_counts(s), "x34_drain", output_mode="complete", state_partitions=8)
 
 
@@ -84,7 +81,7 @@ def x35(spark, sf):
     from deva_spark.streaming.stateful import streaming_running_sum_exact
     from deva_spark.streaming.twin import events_file_stream, run_available_now
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     return run_available_now(
         streaming_running_sum_exact(s), "x35_drain", output_mode="append", state_partitions=8
     )
@@ -112,7 +109,7 @@ def x36(spark, sf):
     from deva_spark.streaming.stateful import streaming_zscore_anomalies
     from deva_spark.streaming.twin import events_file_stream, run_available_now
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     out = run_available_now(
         streaming_zscore_anomalies(s), "x36_drain", output_mode="append", state_partitions=8
     )
@@ -169,7 +166,7 @@ def x38(spark, sf):
         stream_interval_join,
     )
 
-    staged = _staged_events(spark, sf)
+    staged = _shared_artifact_path(spark, sf, "event_chunks4")
     clicks = events_file_stream(spark, staged, files_per_trigger=2).filter(
         F.col("event_type") == "click"
     )
@@ -542,7 +539,7 @@ def x49(spark, sf):
         streaming_first_event,
     )
 
-    s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
+    s = events_file_stream(spark, _shared_artifact_path(spark, sf, "event_chunks4"), files_per_trigger=2)
     return run_available_now(
         streaming_first_event(s, "user_id"), "x49_drain", output_mode="complete", state_partitions=8
     )
@@ -790,16 +787,9 @@ def x55(spark, sf):
     # scanned once (a self-join would recompute the explode subtree for
     # both sides), the shuffle carries 8-byte hashes, and per-shingle
     # fan-out is bounded by C(n_sources, 2), not pair rows across docs.
-    staged_src = staged_artifact_path(sf, "shingle5_src")
-    if staged_src:
-        # staged index is already per-shingle sorted source arrays —
-        # the timed query is scan → pair-explode → pair aggregate
-        srcs = read_parquet(spark, staged_src)
-    else:
-        sh = _shingle5_hashes(spark, sf).select("source", "_sh").distinct()
-        srcs = sh.groupBy("_sh").agg(
-            F.array_sort(F.collect_set("source")).alias("_srcs")
-        )
+    # the staged index is already per-shingle sorted source arrays —
+    # the timed query is scan → pair-explode → pair aggregate
+    srcs = _shared_artifact(spark, sf, "shingle5_src")
     n = F.size("_srcs")
     pairs = F.flatten(
         F.transform(
@@ -1104,7 +1094,6 @@ def x121(spark, sf):
     from deva_spark.functions import bpe
 
     docs = _t(spark, sf, "documents")
-    stage_artifacts(spark, sf, ["bpe_seg"])
     final = _shared_artifact(spark, sf, "bpe_seg")
     return bpe.token_counts(docs, final).orderBy("doc_id")
 
@@ -1168,7 +1157,6 @@ def x124(spark, sf):
     # order, or an unseen word mis-segmented all flip the hash.
     from deva_spark.functions import bpe
 
-    stage_artifacts(spark, sf, ["bpe_merges7"])
     merges = [
         (r.step, r.lhs, r.rhs, r.freq)
         for r in _shared_artifact(spark, sf, "bpe_merges7").collect()

@@ -18,26 +18,20 @@ from deva_spark.operators import aggregates as agg
 from deva_spark.operators import dedup
 from deva_spark.operators import graphs
 from deva_spark.operators import joins
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 import os as _os
-from deva_spark.session import read_parquet
 from deva_spark.queries._infra import (
     ORACLE_SQL,
-    _build_dup_assign,
     _doc_signatures,
     _jaccard_pairs,
-    _session_cache,
     _shared_artifact,
-    _shingle5_hashes,
+    _shared_artifact_path,
     _t,
     query,
-    staged_artifact_path,
 )
 from deva_spark.queries.declared import _STOPS_SQL
+from deva_spark.session import session_memo
 from deva_spark.queries.similarity import (
-    _cached_win8_index,
-    _staged_docs,
     _x23_oracle,
     _x32_oracle,
 )
@@ -123,21 +117,13 @@ def x74(spark, sf):
     # index over per-doc distinct window hashes; the self-join ships
     # 8-byte xxhash64 keys, never text; n_common is an exact integer
     # count, hash-stable across engines.
-    from deva_spark.functions.substring import (
-        substring_dup_pairs,
-        substring_dup_pairs_from_groups,
-    )
+    # The staged pair-ready grouped index makes it one scan, an
+    # in-array pair explode and one aggregate (the shingle5_src move;
+    # 2x the flat-index join route at sf1, parity-tested).
+    from deva_spark.functions.substring import substring_dup_pairs_from_groups
 
-    staged = staged_artifact_path(sf, "subwin8g")
-    if staged:
-        # pair-ready grouped index: one scan, in-array pair explode,
-        # one aggregate (the shingle5_src move; 2x the flat-index join
-        # route at sf1, parity-tested)
-        return substring_dup_pairs_from_groups(
-            read_parquet(spark, staged), min_common=1
-        )
-    return substring_dup_pairs(
-        _t(spark, sf, "documents"), window=8, min_common=1
+    return substring_dup_pairs_from_groups(
+        _shared_artifact(spark, sf, "subwin8g"), min_common=1
     )
 
 
@@ -179,30 +165,14 @@ def x75(spark, sf):
     # windows certifies a run of L + window - 1 words exactly. The join
     # ships (hash, id, pos) rows; the island window rides the pair
     # shuffle.
-    from deva_spark.functions.substring import (
-        longest_common_run,
-        longest_common_run_from_groups,
-    )
+    # The staged pair-ready positioned group index makes it scan ->
+    # in-array pair explode -> island aggregate, with no join shuffle
+    # (the subwin8g move; parity-tested).
+    from deva_spark.functions.substring import longest_common_run_from_groups
 
-    grouped = staged_artifact_path(sf, "subpos8g")
-    if grouped:
-        # pair-ready positioned group index: scan → in-array pair
-        # explode → island aggregate, no join shuffle (the subwin8g
-        # move; parity-tested)
-        return longest_common_run_from_groups(
-            read_parquet(spark, grouped), window=8
-        )
-    staged = staged_artifact_path(sf, "subpos8")
-    if staged:
-        # positioned index staged by x76: scan parquet instead of
-        # re-running the window explode (the index is a pure per-doc
-        # function, shared across the tier)
-        return longest_common_run(
-            _t(spark, sf, "documents"),
-            window=8,
-            positions=read_parquet(spark, staged),
-        )
-    return longest_common_run(_t(spark, sf, "documents"), window=8)
+    return longest_common_run_from_groups(
+        _shared_artifact(spark, sf, "subpos8g"), window=8
+    )
 
 
 @query(
@@ -235,28 +205,15 @@ def x77(spark, sf):
     # (new x old) plus a batch self-join (new x new). old x old is never
     # recomputed, so the per-batch cost scales with batch size, not
     # corpus size; result == the full x74 pair set restricted to pairs
-    # touching the batch (parity-tested). The staged positioned index
-    # (subpos8) supplies (doc_id, wh) rows via one distinct aggregate
-    # when present; the PRUNED flat index (subwin8d — only whs held by
-    # >= 2 docs, the ~10x-smaller pair-forming subset) is preferred
-    # when staged, and is result-identical by construction (a wh held
-    # by one doc can never form a pair).
-    from deva_spark.functions.substring import (
-        incremental_dup_pairs,
-        window_hashes,
-    )
+    # touching the batch (parity-tested). The index is the staged
+    # PRUNED flat index (subwin8d — distinct (doc_id, wh) rows whose wh
+    # is held by >= 2 docs, the ~10x-smaller pair-forming subset),
+    # result-identical by construction (a wh held by one doc can never
+    # form a pair).
+    from deva_spark.functions.substring import incremental_dup_pairs
 
     batch_pred = F.col("doc_id") % 10 == 0
-    pruned = staged_artifact_path(sf, "subwin8d")
-    staged = staged_artifact_path(sf, "subpos8")
-    if pruned:
-        idx = read_parquet(spark, pruned)  # already distinct + pruned
-    elif staged:
-        idx = (
-            read_parquet(spark, staged).select("doc_id", "wh").distinct()
-        )
-    else:
-        idx = _cached_win8_index(spark, sf)
+    idx = _shared_artifact(spark, sf, "subwin8d")
     return incremental_dup_pairs(
         idx.filter(batch_pred),
         idx.filter(~batch_pred),
@@ -294,7 +251,6 @@ def x78(spark, sf):
     # hash-matches the batch oracle under any batching. The new-x-new
     # side runs as the batch epilogue (x77) once the batch index
     # appends to the staged corpus.
-    from deva_spark.functions.substring import window_hashes
     from deva_spark.streaming.twin import (
         docs_file_stream,
         run_available_now,
@@ -302,61 +258,20 @@ def x78(spark, sf):
     )
 
     batch_pred = F.col("doc_id") % 10 == 0
-    pruned = staged_artifact_path(sf, "subwin8d")
-    staged = staged_artifact_path(sf, "subpos8")
-    if pruned:
-        # corpus-wide >= 2-doc prune is sound for the stream-static join
-        # too: an (old, new) pair's shared wh has corpus count >= 2, so
-        # the old row survives the prune
-        old = read_parquet(spark, pruned).filter(~batch_pred)
-    elif staged:
-        old = (
-            read_parquet(spark, staged)
-            .filter(~batch_pred)
-            .select("doc_id", "wh")
-            .distinct()
-        )
-    else:
-        # static side is re-evaluated every micro-batch: the shared
-        # session-cached index (filter-after is per-doc pure, same rows)
-        old = _cached_win8_index(spark, sf).filter(~batch_pred)
+    # corpus-wide >= 2-doc prune is sound for the stream-static join
+    # too: an (old, new) pair's shared wh has corpus count >= 2, so the
+    # old row survives the prune
+    old = _shared_artifact(spark, sf, "subwin8d").filter(~batch_pred)
     s = docs_file_stream(
-        spark, _staged_docs(spark, sf), files_per_trigger=1
+        spark,
+        _shared_artifact_path(spark, sf, "doc_chunks_new10"),
+        files_per_trigger=1,
     )
     return run_available_now(
         streaming_incremental_pairs(s, old, window=8),
         "x78_drain",
         output_mode="complete", state_partitions=8,
     )
-
-
-def _staged_ivf_append(
-    spark: SparkSession, sf_dir: str, batch_where: str = "vec_id % 10 = 0"
-) -> str:
-    """Session-scoped IVF layout built INCREMENTALLY: stage the old
-    corpus (NOT ``batch_where`` — centers train on it alone), then
-    append the new batch with `ivf_append` (old centers, no retrain).
-    The batch is the scale-invariant modular arrival slice (the x86
-    recipe; the old ``vec_id >= 450`` cutoff left a 1% training corpus
-    on amplified tables). The dir is what a growing 100 TB vector store
-    looks like between restages."""
-    try:
-        _mt = int(
-            _os.path.getmtime(_os.path.join(sf_dir, "embeddings.parquet"))
-        )
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "ivf_append", batch_where, _mt)
-    if key not in cache:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="deva_ivf_inc_")
-        emb = _t(spark, sf_dir, "embeddings")
-        V.ivf_stage(emb.filter(~F.expr(batch_where)), path)
-        V.ivf_append(spark, path, emb.filter(F.expr(batch_where)))
-        cache[key] = path
-    return cache[key]
 
 
 @query("x79_ivf_append_search", None)  # oracle attached below (generated)
@@ -374,7 +289,7 @@ def x79(spark, sf):
     # is live.
     q = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 10)
     return V.ivf_search_staged(
-        spark, _staged_ivf_append(spark, sf), q, k=5, n_probe=4
+        spark, _shared_artifact_path(spark, sf, "ivf16_app"), q, k=5, n_probe=4
     )
 
 
@@ -449,14 +364,9 @@ def x76(spark, sf):
         _t(spark, sf, "documents"),
         nparts=scan_partitions(spark, sf, "documents"),
     )
-    staged = staged_artifact_path(sf, "subpos8")
-    if staged:
-        return remove_duplicate_runs(
-            docs,
-            window=8,
-            positions=read_parquet(spark, staged),
-        )
-    return remove_duplicate_runs(docs, window=8)
+    return remove_duplicate_runs(
+        docs, window=8, positions=_shared_artifact(spark, sf, "subpos8")
+    )
 
 
 @query(
@@ -569,17 +479,9 @@ def x81(spark, sf):
     # clusters and the whole cluster relabels.
     from deva_spark.operators import graphs
 
-    batch_a = F.col("id_a") % 10 == 0
-    batch_b = F.col("id_b") % 10 == 0
-    pairs = _jaccard_pairs(spark, sf)
-    staged = staged_artifact_path(sf, "dup_assign_old")
-    if staged:
-        old_assign = read_parquet(spark, staged)
-    else:
-        old_assign = graphs.canonical_assignments(
-            pairs.filter(~batch_a & ~batch_b).select("id_a", "id_b")
-        )
-    new_pairs = pairs.filter(batch_a | batch_b).select("id_a", "id_b")
+    batch = (F.col("id_a") % 10 == 0) | (F.col("id_b") % 10 == 0)
+    old_assign = _shared_artifact(spark, sf, "dup_assign_old")
+    new_pairs = _jaccard_pairs(spark, sf).filter(batch).select("id_a", "id_b")
     return graphs.incremental_canonical_assignments(old_assign, new_pairs)
 
 
@@ -627,12 +529,7 @@ def x82(spark, sf):
     # near_duplicates on the union incl. the staged old_chunks route
     # (tests/test_text_similarity.py).
     batch_pred = F.col("doc_id") % 10 == 0
-    staged = staged_artifact_path(sf, "simhash_fps")
-    fps = (
-        read_parquet(spark, staged)
-        if staged
-        else sh.fingerprints(_t(spark, sf, "documents"))
-    )
+    fps = _shared_artifact(spark, sf, "simhash_fps")
     return sh.incremental_near_duplicates(
         fps.filter(batch_pred),
         fps.filter(~batch_pred),
@@ -670,27 +567,17 @@ def x83(spark, sf):
     # restricted to batch docs (oracle = q34's digest grouping as
     # per-doc dup_of rows with that restriction; parity test in
     # tests/test_windows_dedup.py).
+    # The staged digest table IS the index: the batch's digests are
+    # slices of it (a re-crawl carries the same trimmed text, hence the
+    # same digest, under its new id) — no text re-hash at all.
     batch_pred = F.col("doc_id") % 10 == 0
-    staged = staged_artifact_path(sf, "doc_digests")
-    if staged:
-        # the staged digest table IS the index: the batch's digests are
-        # slices of it (a re-crawl carries the same trimmed text, hence
-        # the same digest, under its new id) — no text re-hash at all
-        dg = read_parquet(spark, staged)
-        recrawl_dg = dg.filter(F.col("doc_id") % 97 == 3).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(10_000_000_000).cast("long")
-        )
-        batch_dg = dg.filter(batch_pred).unionByName(recrawl_dg)
-        return dedup.incremental_exact_dups_from_digests(
-            batch_dg, dg.filter(~batch_pred)
-        )
-    docs = _t(spark, sf, "documents")
-    recrawl = docs.filter(F.col("doc_id") % 97 == 3).withColumn(
+    dg = _shared_artifact(spark, sf, "doc_digests")
+    recrawl_dg = dg.filter(F.col("doc_id") % 97 == 3).withColumn(
         "doc_id", F.col("doc_id") + F.lit(10_000_000_000).cast("long")
     )
-    batch = docs.filter(batch_pred).unionByName(recrawl)
-    return dedup.incremental_exact_dups(
-        batch, dedup.digests(docs.filter(~batch_pred))
+    batch_dg = dg.filter(batch_pred).unionByName(recrawl_dg)
+    return dedup.incremental_exact_dups_from_digests(
+        batch_dg, dg.filter(~batch_pred)
     )
 
 
@@ -826,25 +713,16 @@ def x86(spark, sf):
     # constants): the old side's sizes come from the bounded synopsis
     # instead of a second full-index aggregation
     sizes = _shared_artifact(spark, sf, "shingle5_sizes")
-    pruned = staged_artifact_path(sf, "shingle5d")
-    if pruned:
-        # the >= 2-doc pruned projection: |A∩B| identical by
-        # construction; BOTH sides' sizes then come from the full-index
-        # synopsis (the new_sizes contract)
-        idx = read_parquet(spark, pruned)
-        return mh.incremental_shingle_overlap(
-            idx.filter(batch_pred),
-            idx.filter(~batch_pred),
-            pct_threshold=30,
-            old_sizes=sizes.filter(~batch_pred),
-            new_sizes=sizes.filter(batch_pred),
-        )
-    idx = _shingle5_hashes(spark, sf).select("doc_id", "_sh")
+    # the >= 2-doc pruned projection: |A∩B| identical by construction;
+    # BOTH sides' sizes then come from the full-index synopsis (the
+    # new_sizes contract)
+    idx = _shared_artifact(spark, sf, "shingle5d")
     return mh.incremental_shingle_overlap(
         idx.filter(batch_pred),
         idx.filter(~batch_pred),
         pct_threshold=30,
         old_sizes=sizes.filter(~batch_pred),
+        new_sizes=sizes.filter(batch_pred),
     )
 
 
@@ -1012,12 +890,7 @@ def x89(spark, sf):
     # retraction contract (pair membership is a pure two-doc function,
     # so surviving pairs == staged pairs with both endpoints surviving).
     pairs = _jaccard_pairs(spark, sf).select("id_a", "id_b")
-    staged = staged_artifact_path(sf, "dup_assign")
-    assign = (
-        read_parquet(spark, staged)
-        if staged
-        else graphs.canonical_assignments(pairs)
-    )
+    assign = _shared_artifact(spark, sf, "dup_assign")
     forget = (
         _t(spark, sf, "documents")
         .filter(F.expr(_FORGET_PRED))
@@ -1058,16 +931,7 @@ def x90(spark, sf):
     # rank window picks argmax(q, tie -> min doc_id) per cluster. Both
     # the window and the aggregate partition on cluster_id (one
     # exchange, AQE-reused).
-    staged = staged_artifact_path(sf, "dup_assign")
-    assign = (
-        read_parquet(spark, staged)
-        if staged
-        else _build_dup_assign(spark, sf)
-    )
-    # _shared_artifact: ONE copy of the doc_stats column recipe — the
-    # inline fallback duplicated _build_doc_stats's q column, so a
-    # staging change would silently diverge staged vs unstaged verdicts
-    # (r11 review); the session cache also shares the build with x15/x91
+    assign = _shared_artifact(spark, sf, "dup_assign")
     feats = _shared_artifact(spark, sf, "doc_stats").select("doc_id", "q")
     return dedup.cluster_representatives(
         assign, feats, [F.col("q").desc(), F.col("doc_id")]
@@ -1151,15 +1015,11 @@ def x91(spark, sf):
     # governed pipeline must produce for any takedown or appeal. Rides
     # the staged doc_stats + neardup_pairs artifacts (x15's tables);
     # kept-rows == the curated output (parity test).
-    # one copy of the stats recipe via the shared tier (r11 review)
-    stats = _shared_artifact(spark, sf, "doc_stats")
     from deva_spark.plans.corpus import curation_audit
 
-    staged_pairs = staged_artifact_path(sf, "neardup_pairs")
     return curation_audit(
-        stats,
-        sigs=None if staged_pairs else _doc_signatures(spark, sf),
-        pairs=read_parquet(spark, staged_pairs) if staged_pairs else None,
+        _shared_artifact(spark, sf, "doc_stats"),
+        pairs=_shared_artifact(spark, sf, "neardup_pairs"),
     )
 
 
@@ -1312,19 +1172,19 @@ def x95(spark, sf):
     # ride the exact-cents integer path (q04's determinism contract).
     orders = _t(spark, sf, "orders")
     cust = _t(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    # the 8 KB bitmap is a bounded driver-blocking build: cache it per
-    # (session, sf, customer-mtime) so repeated invocations (bench
-    # passes, driver retries) pay the dim scan once — the runtime-filter
-    # reuse shape. The mtime in the key mirrors the artifact tier's
-    # source invalidation (ADVICE r9): a refreshed customer table within
-    # one session must rebuild the bitmap, else bloom false negatives
-    # silently drop matching join rows.
-    cache = _session_cache(spark)
+    # the 8 KB bitmap is a bounded driver-blocking build: the session
+    # memo keeps it per (sf, customer-mtime) so repeated invocations
+    # (bench passes, driver retries) pay the dim scan once — the
+    # runtime-filter reuse shape. The mtime in the key mirrors the
+    # artifact tier's source invalidation (ADVICE r9): a refreshed
+    # customer table within one session must rebuild the bitmap, else
+    # bloom false negatives silently drop matching join rows.
+    cache = session_memo(spark)
     try:
         cust_mtime = _os.stat(_os.path.join(sf, "customer.parquet")).st_mtime_ns
     except OSError:
         cust_mtime = 0
-    bkey = (sf, "x95_bloom_bitmap", cust_mtime)
+    bkey = ("x95_bloom_bitmap", sf, cust_mtime)
     if bkey not in cache:
         cache[bkey] = joins.build_bloom_bitmap(
             cust, "c_custkey", n_hashes=3, n_bits=1 << 14

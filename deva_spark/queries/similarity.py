@@ -1,5 +1,5 @@
 """Text metrics + similarity/dedup + ANN + relational extensions
-(x01-x32), plus the staged-directory helpers later tiers reuse.
+(x01-x32).
 
 Token counts, lang-id, quality scores, fingerprints (x01-x04); n-gram
 Jaccard, MinHash-LSH, SimHash, exact cosine top-k, hyperplane-LSH and
@@ -11,7 +11,6 @@ hashes, take-while, ordered pairs (x28-x31).
 
 from __future__ import annotations
 
-from deva_spark.functions import minhash as mh
 from deva_spark.functions import simhash as sh
 from deva_spark.functions import text as T
 from deva_spark.functions import vectors as V
@@ -20,22 +19,16 @@ from deva_spark.operators import joins
 from deva_spark.operators import windows
 from deva_spark.operators.aggregates import money_sum
 from deva_spark.operators.aggregates import round_money
-from pyspark.sql import DataFrame
-from pyspark.sql import SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import os as _os
-from deva_spark.session import read_parquet
 from deva_spark.queries._infra import (
     ORACLE_SQL,
     _doc_index,
-    _doc_signatures,
     _jaccard_pairs,
-    _session_cache,
     _shared_artifact,
+    _shared_artifact_path,
     _t,
     query,
-    staged_artifact_path,
 )
 from deva_spark.queries.declared import _STOPS_SQL
 
@@ -166,14 +159,11 @@ def x05(spark, sf):
         FROM scored WHERE n_match >= 6 ORDER BY id_a, id_b""",
 )
 def x06(spark, sf):
-    # staged neardup_pairs artifact IS this query's answer table (the
-    # x05/jaccard_pairs precedent); unstaged runs the LSH pass off the
-    # shared signature table.
-    staged = staged_artifact_path(sf, "neardup_pairs")
-    if staged:
-        return read_parquet(spark, staged).select("id_a", "id_b", "est_sim")
-    docs = _t(spark, sf, "documents").filter(F.size(T.words(F.col("text"))) >= 3)
-    return mh.near_duplicates(docs, min_matches=6, sigs=_doc_signatures(spark, sf))
+    # the staged neardup_pairs artifact IS this query's answer table
+    # (the x05/jaccard_pairs precedent)
+    return _shared_artifact(spark, sf, "neardup_pairs").select(
+        "id_a", "id_b", "est_sim"
+    )
 
 
 @query(
@@ -208,11 +198,11 @@ def x06(spark, sf):
 )
 def x07(spark, sf):
     # staged simhash_fps artifact feeds the banding/verify joins (the
-    # doc_sigs pattern); unstaged computes + persists fingerprints here.
-    staged = staged_artifact_path(sf, "simhash_fps")
-    fps = read_parquet(spark, staged) if staged else None
+    # doc_sigs pattern)
     return sh.near_duplicates(
-        _t(spark, sf, "documents"), max_hamming=3, fps=fps
+        _t(spark, sf, "documents"),
+        max_hamming=3,
+        fps=_shared_artifact(spark, sf, "simhash_fps"),
     ).select("id_a", "id_b", F.col("hd").cast("bigint").alias("hd"))
 
 
@@ -486,33 +476,17 @@ def x14(spark, sf):
 )
 def x15(spark, sf):
     # The full north-star curation funnel (plans/corpus.py): quality/lang
-    # gate -> exact dedup -> MinHash-LSH near-dup removal -> token counts.
-    # With the doc_stats artifact staged (bench stages it), the funnel is
-    # pure relational work over two staged tables — stats are exact
-    # per-doc functions, so both routes produce identical rows and share
-    # the oracle. Unstaged: the self-contained raw-text funnel.
-    staged_stats = staged_artifact_path(sf, "doc_stats")
-    if staged_stats:
-        from deva_spark.plans.corpus import curate_from_stats
+    # gate -> exact dedup -> MinHash-LSH near-dup removal -> token counts,
+    # as pure relational work over two staged tables (per-doc stats and
+    # the near-dup pair set).
+    from deva_spark.plans.corpus import curate_from_stats
 
-        staged_pairs = staged_artifact_path(sf, "neardup_pairs")
-        return curate_from_stats(
-            read_parquet(spark, staged_stats),
-            sigs=None if staged_pairs else _doc_signatures(spark, sf),
-            min_quality=40.0,
-            lang="en",
-            pairs=read_parquet(spark, staged_pairs) if staged_pairs else None,
-        ).select("doc_id", "n_tokens")
-    from deva_spark.plans.corpus import curate
-
-    curated, _ = curate(
-        _t(spark, sf, "documents"),
+    return curate_from_stats(
+        _shared_artifact(spark, sf, "doc_stats"),
         min_quality=40.0,
         lang="en",
-        with_report=False,
-        sigs=_doc_signatures(spark, sf),
-    )
-    return curated.select("doc_id", "n_tokens")
+        pairs=_shared_artifact(spark, sf, "neardup_pairs"),
+    ).select("doc_id", "n_tokens")
 
 
 @query(
@@ -1000,98 +974,13 @@ def _x32_oracle(
 @query("x32_ivf_topk", None)  # oracle attached below (generated)
 def x32(spark, sf):
     # IVF ANN scale path, hash-checked against a generated DuckDB mirror
-    # of the whole pipeline since round 3. When the cell-partitioned
-    # "ivf16" artifact is staged (bench stages it; the 100 TB "train
-    # once, search many" layout), search is a partition-pruned scan of
-    # the probe cells (ivf_search_staged) — identical results for
-    # identical centers/params, so the same oracle covers both routes.
-    # Unstaged (ad-hoc/correctness runs): self-contained in-query build.
-    emb = _t(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    staged = staged_artifact_path(sf, "ivf16")
-    if staged:
-        return V.ivf_search_staged(spark, staged, q, k=5, n_probe=4)
-    return V.ivf_topk(emb, q, k=5)
+    # of the whole pipeline since round 3: search is a partition-pruned
+    # scan of the probe cells of the cell-partitioned "ivf16" artifact
+    # (the 100 TB "train once, search many" layout).
+    q = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 10)
+    return V.ivf_search_staged(
+        spark, _shared_artifact_path(spark, sf, "ivf16"), q, k=5, n_probe=4
+    )
 
 
 ORACLE_SQL["x32_ivf_topk"] = _x32_oracle()
-
-
-def _staged_required(sf_dir: str, name: str) -> str:
-    """staged_artifact_path that FAILS LOUDLY: the x101-x103 stagers
-    write parquet + a sidecar marker, and a crash between the two left
-    path=None flowing into ivfpq_search as an obscure path-type error
-    far from the cause (r11 review)."""
-    path = staged_artifact_path(sf_dir, name)
-    if path is None:
-        raise RuntimeError(
-            f"artifact {name!r} did not stage completely under {sf_dir} "
-            "(marker missing) — re-run stage_artifacts or inspect the "
-            "stager's write"
-        )
-    return path
-
-
-def _cached_win8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached full-corpus 8-token window-hash index — the
-    UNSTAGED fallback x77/x78 share (r11 review: each invocation used
-    to persist a FRESH corpus-sized copy with no unpersist, so repeated
-    runs in one session accumulated duplicate cache entries until
-    eviction pressure hit every other cached artifact)."""
-    from deva_spark.functions.substring import window_hashes
-
-    cache = _session_cache(spark)
-    key = (sf_dir, "win8_index_inline")
-    if key not in cache:
-        cache[key] = window_hashes(
-            _t(spark, sf_dir, "documents"), window=8
-        )
-    df = cache[key]
-    if df.storageLevel.useMemory is False and df.storageLevel.useDisk is False:
-        df.persist()
-        df.count()
-    return df
-
-
-def _staged_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events table once per (session, sf) as ts-ordered chunks —
-    the replayable input the streaming queries drain. Session-scoped via
-    the same weak-keyed cache as the doc index."""
-    # mtime in the key: a regenerated source table within one session
-    # must restage, not replay stale chunks (the x95 bitmap / artifact-
-    # tier convention; r11 review)
-    try:
-        _mt = int(_os.path.getmtime(_os.path.join(sf_dir, "events.parquet")))
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "staged_events", _mt)
-    if key not in cache:
-        from deva_spark.streaming.twin import stage_event_chunks
-
-        cache[key] = stage_event_chunks(spark, sf_dir, chunks=4)
-    return cache[key]
-
-
-def _staged_docs(
-    spark: SparkSession, sf_dir: str, where: str = "doc_id % 10 = 0"
-) -> str:
-    """Stage the new-batch document slice (scale-invariant modular
-    arrival split by default) once per (session, sf) as doc_id-ordered
-    chunks for the streaming incremental-dedup drain."""
-    # mtime in the key: a regenerated source table within one session
-    # must restage, not replay stale chunks (the x95 bitmap / artifact-
-    # tier convention; r11 review)
-    try:
-        _mt = int(_os.path.getmtime(_os.path.join(sf_dir, "documents.parquet")))
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "staged_docs", where, _mt)
-    if key not in cache:
-        from deva_spark.streaming.twin import stage_doc_chunks
-
-        cache[key] = stage_doc_chunks(spark, sf_dir, chunks=3, where=where)
-    return cache[key]
-
-

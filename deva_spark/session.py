@@ -187,28 +187,28 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-#: Attribute name of the per-session memo of table-read PLANS (and scan
-#: partition counts), keyed on (abs path, file mtime).
-#: ``spark.read.parquet`` launches a schema-inference job costing
-#: 150-300 ms of driver latency per call — the single largest fixed
-#: cost of every registry query (r14 optimization pass: 146 queries x
-#: 1-3 reads each). A DataFrame is an immutable logical plan, so
-#: handing the same object back is pure plan reuse: every action still
-#: scans the parquet files (this is NOT result caching — nothing is
-#: persisted), and the mtime in the key invalidates the memo the moment
-#: testdata is regenerated. The memo lives ON the session object
-#: (ADVICE r14: the previous WeakKeyDictionary's VALUES held DataFrames
-#: that strongly referenced the session, so entries could never be
-#: collected — an attribute dies with its session by construction).
-_READ_CACHE_ATTR = "_deva_read_cache"
+#: Attribute name of the one per-session memo. It holds PLANS, never
+#: results: table and artifact read plans keyed on (abs path, mtime),
+#: scan partition counts, the registry's constructed query plans (see
+#: ``queries._infra.query``) and driver-side synopses keyed on their
+#: source's mtime. ``spark.read.parquet`` launches a schema-inference
+#: job costing 150-300 ms of driver latency per call, and a DataFrame is
+#: an immutable logical plan, so handing the same object back is pure
+#: plan reuse: every action still scans the parquet files, and the mtime
+#: in each key invalidates an entry the moment its source is rewritten.
+#: The memo lives ON the session object, so it dies with the session: a
+#: module-level registry keyed by session would hold DataFrames that
+#: strongly reference their session and could never be collected.
+_MEMO_ATTR = "_deva_memo"
 
 
-def _read_cache(spark: SparkSession) -> dict:
-    cache = getattr(spark, _READ_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _READ_CACHE_ATTR, cache)
-    return cache
+def session_memo(spark: SparkSession) -> dict:
+    """The session's memo dict (see :data:`_MEMO_ATTR`)."""
+    memo = getattr(spark, _MEMO_ATTR, None)
+    if memo is None:
+        memo = {}
+        setattr(spark, _MEMO_ATTR, memo)
+    return memo
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -218,7 +218,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the timestamp exactly (generator emits µs-grain values).
 
     The returned plan is memoized per (session, path, mtime) — see
-    :data:`_READ_CACHE_ATTR`."""
+    :data:`_MEMO_ATTR`."""
     from pyspark.sql import functions as F
 
     path = table_path(sf_dir, name)
@@ -226,7 +226,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None
-    cache = _read_cache(spark)
+    cache = session_memo(spark)
     key = (os.path.abspath(path), mtime)
     # confs re-applied on EVERY return (ADVICE r14: a cache hit skipped
     # them, fragile if a caller mutates session confs mid-run) — two
@@ -255,7 +255,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None
-    cache = _read_cache(spark)
+    cache = session_memo(spark)
     key = (os.path.abspath(path), mtime)
     hit = cache.get(key)
     if hit is not None:
@@ -273,7 +273,7 @@ def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     non-pushable filter or projection on top never changes it — so
     every :func:`ensure_parallelism` caller over the same table can
     share one probe (r14 optimization pass)."""
-    cache = _read_cache(spark)
+    cache = session_memo(spark)
     path = table_path(sf_dir, name)
     try:
         mtime = os.path.getmtime(path)

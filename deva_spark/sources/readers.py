@@ -39,30 +39,6 @@ def text_stream(spark: SparkSession, directory: str) -> DataFrame:
     return spark.readStream.text(directory)
 
 
-def csv_table(spark: SparkSession, path: str, schema: str | None = None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    return (reader.schema(schema) if schema else reader.option("inferSchema", "true")).csv(path)
-
-
-def json_table(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    reader = spark.read
-    return (reader.schema(schema) if schema else reader).json(path)
-
-
-def parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Opaque binary payloads (multimodal ingestion): columns
-    (path, modificationTime, length, content:binary)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-
-
 def rate_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
     """``from_periodic``/``timer`` analog: synthetic paced source with
     (timestamp, value) rows."""

@@ -212,13 +212,6 @@ def console_sink(stream_df: DataFrame, mode: str = "append"):
     return stream_df.writeStream.format("console").outputMode(mode).start()
 
 
-def memory_sink(stream_df: DataFrame, name: str, mode: str = "append"):
-    """``recent()`` cache analog: queryable in-memory table of results."""
-    return (
-        stream_df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    )
-
-
 def parquet_stream_sink(stream_df: DataFrame, path: str, checkpoint: str | None = None):
     """Durable streaming persistence (DBStream streaming twin): exactly-once
     via checkpoint + atomic file commits."""

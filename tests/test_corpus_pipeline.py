@@ -42,24 +42,27 @@ def test_curate_llm_annotation_stage(spark, sf_dir):
     assert all(r.completion.startswith("stub:") for r in rows)
 
 
-def test_artifact_markers_and_idempotence(spark, sf_dir, tmp_path, monkeypatch):
-    # staging is idempotent (second call reports 0.0s), and ivf16's
-    # completion marker is its sidecar — a dir with only _SUCCESS (the
-    # half-written state: parquet done, sidecar not yet) must read as
-    # NOT staged, while plain artifacts complete on _SUCCESS alone.
+def test_artifact_staging_is_idempotent_and_atomic(spark, sf_dir, tmp_path, monkeypatch):
+    # staging is idempotent (second call reports 0.0s); only a directory
+    # renamed into place counts as staged, so a stager's leftover temp
+    # dir (a killed run) is never read, and a missing artifact stages on
+    # its first read
     import os
 
     from deva_spark import queries as Q
+    from deva_spark.queries._infra import _artifact_path, _shared_artifact
 
     monkeypatch.setenv("DEVA_ARTIFACT_DIR", str(tmp_path))
     took = Q.stage_artifacts(spark, sf_dir, ["doc_stats", "ivf16"])
     assert took["doc_stats"] > 0 and took["ivf16"] > 0
     again = Q.stage_artifacts(spark, sf_dir, ["doc_stats", "ivf16"])
     assert again == {"doc_stats": 0.0, "ivf16": 0.0}
-
     ivf_path = Q.staged_artifact_path(sf_dir, "ivf16")
-    assert ivf_path is not None
-    os.remove(os.path.join(ivf_path, "_ivf_centers.json"))
-    assert Q.staged_artifact_path(sf_dir, "ivf16") is None
-    assert os.path.exists(os.path.join(ivf_path, "_SUCCESS"))
-    assert Q.staged_artifact_path(sf_dir, "doc_stats") is not None
+    assert os.path.exists(os.path.join(ivf_path, "_ivf_centers.json"))
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(_artifact_path(sf_dir, n)) for n in ("doc_stats", "ivf16")
+    )
+    os.makedirs(_artifact_path(sf_dir, "cms_cust") + ".tmp-killed")
+    assert Q.staged_artifact_path(sf_dir, "cms_cust") is None
+    assert _shared_artifact(spark, sf_dir, "cms_cust").count() > 0
+    assert Q.staged_artifact_path(sf_dir, "cms_cust") is not None

@@ -103,6 +103,67 @@ def test_reshape_zip_flatten_pairs(spark):
     assert pairs.count() == 6
 
 
+def test_reshape_cast_and_append(spark):
+    df = spark.createDataFrame([("7", [1, 2])], "s string, xs array<int>")
+    row = (
+        df.transform(reshape.cast_to("s", "int", out="n"))
+        .transform(reshape.append_element("xs", 3))
+        .collect()[0]
+    )
+    assert row.n == 7 and row.s == "7"
+    assert list(row.xs) == [1, 2, 3]
+
+
+def test_with_columns_one_projection(spark):
+    from deva_spark.operators.core import with_columns
+
+    df = spark.range(3).transform(
+        with_columns(sq=F.col("id") * F.col("id"), neg=-F.col("id"))
+    )
+    assert [(r.sq, r.neg) for r in df.orderBy("id").collect()] == [
+        (0, 0), (1, -1), (4, -2)
+    ]
+    # one Project over the range, not one per derived column
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Project") == 1
+
+
+def test_drop_exact_duplicates_keeps_one_row_per_key(spark):
+    from deva_spark.operators.dedup import drop_exact_duplicates
+
+    df = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "c")], "k int, v string"
+    )
+    out = df.transform(drop_exact_duplicates(["k"])).collect()
+    assert sorted(r.k for r in out) == [1, 2]
+
+
+def test_tail_by_takes_last_rows_without_sort(spark):
+    from deva_spark.operators.sampling import tail_by
+
+    df = spark.range(10).transform(tail_by(3, ["id"]))
+    assert [r.id for r in df.collect()] == [9, 8, 7]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_text_stream_drains_to_console_sink(spark, tmp_path):
+    from deva_spark.sources.readers import rate_stream, text_stream
+    from deva_spark.sources.writers import console_sink
+
+    (tmp_path / "a.txt").write_text("one\ntwo\n")
+    s = text_stream(spark, str(tmp_path))
+    assert s.isStreaming and s.columns == ["value"]
+    q = console_sink(s)
+    try:
+        q.processAllAvailable()
+        assert q.lastProgress["numInputRows"] == 2
+    finally:
+        q.stop()
+    r = rate_stream(spark, rows_per_second=5)
+    assert r.isStreaming and r.columns == ["timestamp", "value"]
+
+
 def test_http_fetch_stage(spark):
     df = spark.createDataFrame(
         [(1, "https://ok.example/a"), (2, "notaurl")], "id int, url string"

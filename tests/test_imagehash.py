@@ -211,3 +211,25 @@ def test_x122_leaves_no_cache_entry(spark, sf_dir, tmp_path, monkeypatch):
     assert df.count() > 0
     del df
     assert cm.numCachedEntries() == before
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x115_image_neardup_pairs",
+        "x118_video_neardup_pairs",
+        "x123_resampled_video_neardup",
+    ],
+)
+def test_media_neardup_leaves_no_cache_entry(spark, sf_dir, name):
+    # the hash synopsis these tiers materialize for their banded
+    # self-join must not land in the session's CacheManager: a cached
+    # plan would hand the next run of the entry this run's hashes
+    from deva_spark import queries as Q
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    df = Q.SPARK_QUERIES[name](spark, sf_dir)
+    assert df.count() > 0
+    del df
+    assert cm.numCachedEntries() == 0

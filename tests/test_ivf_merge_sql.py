@@ -92,24 +92,23 @@ def test_ivf_staged_partition_pruning(spark, sf_dir, tmp_path):
 
 
 def test_x32_staged_route_matches_unstaged(spark, sf_dir, tmp_path, monkeypatch):
-    # x32 auto-routes through the ivf16 artifact when staged; both
-    # routes must produce identical rows (same centers, same params)
+    # x32 searches the staged ivf16 layout; the in-query IVF build
+    # (`ivf_topk`, same centers, same params) must produce identical rows
     from deva_spark import queries as Q
 
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     unstaged = (
-        Q.SPARK_QUERIES["x32_ivf_topk"](spark, sf_dir)
+        V.ivf_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
         .orderBy("qid", "rnk")
         .collect()
     )
     monkeypatch.setenv("DEVA_ARTIFACT_DIR", str(tmp_path))
-    took = Q.stage_artifacts(spark, sf_dir, ["ivf16"])
-    assert took["ivf16"] > 0
-    assert Q.staged_artifact_path(sf_dir, "ivf16") is not None
     staged = (
         Q.SPARK_QUERIES["x32_ivf_topk"](spark, sf_dir)
         .orderBy("qid", "rnk")
         .collect()
     )
+    assert Q.staged_artifact_path(sf_dir, "ivf16") is not None
     assert staged == unstaged
 
 

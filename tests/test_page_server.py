@@ -105,6 +105,20 @@ def test_admin_panel_runtime_config_tables(server, spark, tmp_path):
     assert any(t["name"] == "admin_panel_probe" for t in tables)
 
 
+def test_admin_panel_reports_artifact_staging(server, spark, sf_dir, tmp_path, monkeypatch):
+    from deva_spark import queries as Q
+    from deva_spark.sources.page import admin_panel
+
+    monkeypatch.setenv("DEVA_ARTIFACT_DIR", str(tmp_path))
+    urls = admin_panel(server, spark, sf_dir=sf_dir)
+    before = json.loads(_get(urls["artifacts"]))
+    assert set(before) == set(Q.ARTIFACT_BUILDERS) | set(Q.ARTIFACT_STAGERS)
+    assert not any(before.values())
+    Q.stage_artifacts(spark, sf_dir, ["cms_cust"])
+    after = json.loads(_get(urls["artifacts"]))
+    assert [n for n, staged in after.items() if staged] == ["cms_cust"]
+
+
 def test_admin_panel_monitors_live_stream(server, spark, tmp_path):
     from deva_spark.sources.page import admin_panel
 

@@ -13,8 +13,8 @@ from __future__ import annotations
 import pytest
 
 from deva_spark import queries as Q
-from deva_spark.queries._infra import _PLAN_CACHE_ATTR, _jobs_submitted
-from deva_spark.session import get_spark
+from deva_spark.queries._infra import _jobs_submitted
+from deva_spark.session import get_spark, session_memo
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +25,7 @@ def spark():
 
 
 def _cache(spark):
-    return getattr(spark, _PLAN_CACHE_ATTR, {})
+    return session_memo(spark)
 
 
 def test_jobs_submitted_reads_the_dag_scheduler(spark):

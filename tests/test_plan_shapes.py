@@ -208,7 +208,10 @@ def test_no_single_reducer_window_or_cartesian_anywhere(spark, sf_dir):
     # 100 TB configuration), NO batch query may compile to a window fed
     # by Exchange SinglePartition (all rows through one reducer) or to a
     # CartesianProduct. This is the plan-level scale contract for every
-    # entry in the driver registry at once.
+    # entry in the driver registry at once. Shared artifacts stage on
+    # first use, so the audited plans are the staged routes (x15's
+    # pair-join funnel, x61's staged-graph pagerank, x55's source-index
+    # overlap, the IVF/IVF-PQ layouts, ...), the only routes there are.
     import re
 
     streaming = {
@@ -385,48 +388,19 @@ def test_driver_window_accounts_for_every_registry_entry():
     assert not uncovered, f"entries with no driver row and no deferral: {uncovered}"
 
 
-def test_staged_routes_plan_shapes(spark, sf_dir, tmp_path, monkeypatch):
-    # The staged fast paths (x15 pair-join funnel, x61 staged-graph
-    # pagerank, x55 source-index overlap) are taken only when artifacts
-    # exist, so the whole-registry audit above exercises the UNstaged
-    # routes; this stages into a scratch dir and audits the staged plans
-    # for the same contracts: no cartesian, no single-reducer window.
+def test_staged_routes_plan_shapes(spark, sf_dir):
+    # The registry audit above runs with the small-input cutover
+    # disabled. These staged routes compile to different plans under the
+    # default cutover, so audit them there for the same contracts: no
+    # cartesian, no single-reducer window. (Every other staged route
+    # compiles to the same plan under both settings.)
     import re
 
-    monkeypatch.setenv("DEVA_ARTIFACT_DIR", str(tmp_path))
-    Q.stage_artifacts(
-        spark,
-        sf_dir,
-        ["doc_sigs", "doc_stats", "neardup_pairs", "pr_edges",
-         "shingle5", "shingle5_sizes", "shingle5_src", "simhash_fps",
-         "emb_base", "ivf16", "ivfpq16", "ivfpq_app", "li_zorder",
-         "subwin8g", "subpos8", "subpos8g", "subwin8d", "shingle5d",
-         "dup_assign_old", "dup_assign", "doc_digests",
-         "kmv_day_users", "quant_day_cells"],
-    )
     for name in (
-        "x101_ivfpq_adc_search",
-        "x102_ivfpq_rerank_search",
-        "x103_ivfpq_append_search",
-        "x105_zorder_staged_box_scan",
-        "x86_incremental_shingle_overlap",
-        "x15_corpus_curation",
-        "x89_retract_clusters",
-        "x90_keep_best_per_cluster",
-        "x91_curation_audit",
-        "x61_pagerank_two_steps",
         "x55_cross_source_overlap",
-        "x07_simhash_neardup",
-        "x23_cosine_neardup",
-        "x32_ivf_topk",
-        "x06_minhash_lsh_neardup",
         "x74_substring_dup_pairs",
         "x75_longest_common_run",
         "x76_remove_duplicate_runs",
-        "x77_incremental_dup_pairs",
-        "x81_incremental_dedup_clusters",
-        "x83_incremental_exact_dedup",
-        "x85_kmv_rollup_distinct_users",
         "x93_quantile_rollup",
     ):
         p = (
@@ -565,8 +539,8 @@ def test_pair_cos_evaluated_once(plans):
     # surviving pair scored twice, guide §4.4). Pin single evaluation on
     # both the one-shot and the incremental cosine tiers.
     # (count pair_cos invocation sites, not ArrowEvalPython nodes: the
-    # un-staged fallback path legitimately carries other Arrow UDFs —
-    # embedding parses — in several branches)
+    # plans legitimately carry other Arrow UDFs — embedding parses — in
+    # several branches)
     for name in ("x23_cosine_neardup", "x88_incremental_cosine_neardup"):
         p = plans(name)
         assert p.count("pair_cos(") <= 1, name

@@ -160,7 +160,6 @@ def test_ann_routes_agree_on_degenerate_vectors(spark, emb):
     empty_q = both.filter(F.col("vec_id") < 0)
     out = V.lsh_topk_onepass(both, empty_q, k=5)
     assert out.columns == ["qid", "vec_id", "cos", "rnk"] and out.count() == 0
-    V.release_neardup_cache()
 
 
 def test_centroids_shape(spark, emb):
