@@ -18,8 +18,10 @@ clips ARE the unit.)
 
 Scale shape: fingerprinting is one Arrow pass (numpy rfft per clip —
 O(n log n), no Python per-sample loop); matching is ONE shuffle keyed
-on peak bin (the inverted index), then a groupBy on the candidate pair
-— both standard skew-manageable joins. Low bins are excluded by
+on the peak feature (the inverted index, grouped into sorted id
+arrays whose pairs explode in-array with
+:func:`deva_spark.operators.neardup.ordered_pairs`), then a groupBy on
+the candidate pair. Low bins are excluded by
 default (``min_bin``): mains hum and DC would otherwise be the classic
 hot key of this index.
 """
@@ -33,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from deva_spark.functions.multimodal import decode_wav
+from deva_spark.operators.neardup import ordered_pairs
 
 
 def spectral_peaks(
@@ -180,16 +183,9 @@ def audio_neardup_pairs(
     )
     pairs = groups.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda b: F.struct(
-                            a.alias("id_a"), b.alias("id_b")
-                        ),
-                    ),
-                )
+            ordered_pairs(
+                F.col("ids"),
+                lambda a, b: F.struct(a.alias("id_a"), b.alias("id_b")),
             )
         ).alias("_p")
     ).select("_p.id_a", "_p.id_b")

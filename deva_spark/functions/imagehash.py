@@ -15,15 +15,10 @@ and DCT machinery):
   * ``phash64`` — sign-vs-median of the top-left 8x8 DCT block (DC
     dropped) of a 32x32 resize: robust to recompression blur.
 
-Near-dup pairs use the SAME banding discipline as
-:mod:`deva_spark.functions.simhash`: hamming distance <= k means at
-least one of k+1 disjoint chunks is EQUAL (pigeonhole), so candidates
-come from k+1 equality self-joins on 16-bit chunks (k=3 default — the
-band width that actually prunes; larger radii need a different index
-family, same as text simhash) and the exact ``bit_count(a XOR b)``
-verify runs JVM-side on the candidates only. Everything after the
-hashing UDF is column algebra — the shuffle is the banded join, keyed
-on (band, chunk), exactly the text-simhash scale shape.
+Near-dup pairs come from the pigeonhole-banded Hamming join shared with
+the text simhash and video tiers (:mod:`deva_spark.operators.neardup`),
+on 4 x 16-bit bands at the default budget of 3 bits. Everything after
+the hashing UDF is column algebra.
 """
 
 from __future__ import annotations
@@ -35,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from deva_spark.functions.multimodal import decode_image, resize_image
+from deva_spark.operators.neardup import hamming_candidates
 
 def _dct_basis(n: int) -> np.ndarray:
     k = np.arange(n)[:, None]
@@ -135,6 +131,38 @@ def image_hashes(
     return df.mapInPandas(run, schema=out_schema)
 
 
+def check_max_distance(max_distance: int) -> None:
+    """The image and video tiers' Hamming budget: 0..3 bits, so the
+    bands stay 16 bits or wider."""
+    if not 0 <= max_distance <= 3:
+        raise ValueError(
+            "max_distance must be 0..3 (16-bit bands stop pruning past "
+            f"that), got {max_distance}"
+        )
+
+
+def _pairs(
+    a: DataFrame,
+    b: DataFrame | None,
+    hash_col: str,
+    id_col: str,
+    max_distance: int,
+) -> DataFrame:
+    """Banded candidates deduped to one ``(id_a, id_b, distance)`` row
+    per pair. ``groupBy.agg(min)`` rather than ``dropDuplicates``: the
+    one exchange carries only the pair and its distance, never the two
+    hashes, and ``min`` is exact since every band copy of a pair
+    carries the same distance."""
+    return (
+        hamming_candidates(
+            a, b, id_col=id_col, hash_col=hash_col, bits=64,
+            max_distance=max_distance,
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.min("distance").alias("distance"))
+    )
+
+
 def hamming_neardup_join(
     left: DataFrame,
     right: DataFrame,
@@ -149,70 +177,10 @@ def hamming_neardup_join(
     ``right`` is today's batch — the banded join probes only
     batch-vs-corpus (never corpus-vs-corpus again), so the daily cost
     scales with the batch, the same discipline as the incremental
-    text tiers (x77/x82/x88)."""
-    if not 0 <= max_distance <= 3:
-        raise ValueError(
-            "max_distance must be 0..3 (16-bit bands stop pruning past "
-            f"that), got {max_distance}"
-        )
-    a = _banded(left, hash_col, id_col, max_distance).alias("a")
-    b = _banded(right, hash_col, id_col, max_distance).alias("b")
-    cand = a.join(
-        b,
-        on=[
-            F.col("a._band") == F.col("b._band"),
-            F.col("a._chunk") == F.col("b._chunk"),
-            # equal ids never pair: an image present in BOTH tables
-            # (a re-submitted batch after the staged corpus was
-            # rebuilt) is already-known, not its own duplicate
-            # (review r14)
-            F.col("a._id") != F.col("b._id"),
-        ],
-    ).select(
-        F.col("a._id").alias("id_a"),
-        F.col("b._id").alias("id_b"),
-        F.bit_count(
-            F.col("a._h").bitwiseXOR(F.col("b._h"))
-        ).alias("distance"),
-    )
-    return _dedup_verified(cand, max_distance)
-
-
-def _dedup_verified(cand: DataFrame, max_distance: int) -> DataFrame:
-    """Exact verify + per-pair dedup of banded candidates, in the order
-    that shuffles least (guide §2.3/§2.4): ``distance`` is computed and
-    filtered BEFORE the exchange (a candidate failing the verify never
-    shuffles — up to k+1 band copies per pair dropped map-side), and the
-    pair dedup is a ``groupBy.agg(min)`` instead of ``dropDuplicates``
-    so the one exchange carries only ``(id_a, id_b, distance)`` — never
-    the two 8-byte hashes. ``min`` is exact: every band copy of a pair
-    carries the identical distance."""
-    return (
-        cand.filter(F.col("distance") <= max_distance)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("distance").alias("distance"))
-    )
-
-
-def _banded(
-    hashes: DataFrame, hash_col: str, id_col: str, max_distance: int
-) -> DataFrame:
-    """(id, hash, band, chunk) exploded over the k+1 disjoint chunks."""
-    n_chunks = max_distance + 1
-    width = 64 // n_chunks
-    mask = (1 << width) - 1 if width < 64 else -1
-    h = F.col(hash_col)
-    chunks = F.array(
-        *[
-            F.shiftrightunsigned(h, i * width).bitwiseAND(F.lit(mask))
-            for i in range(n_chunks)
-        ]
-    )
-    return hashes.select(
-        F.col(id_col).alias("_id"),
-        h.alias("_h"),
-        F.posexplode(chunks).alias("_band", "_chunk"),
-    )
+    text tiers (x77/x82/x88). Equal ids never pair: an image present
+    in both tables is already known, not its own duplicate."""
+    check_max_distance(max_distance)
+    return _pairs(left, right, hash_col, id_col, max_distance)
 
 
 def hamming_neardup_pairs(
@@ -223,18 +191,12 @@ def hamming_neardup_pairs(
 ) -> DataFrame:
     """All id pairs whose 64-bit ``hash_col`` values differ by at most
     ``max_distance`` bits — ``(id_a, id_b, distance)`` with
-    ``id_a < id_b``. Banded exactly like text simhash: ``k+1`` disjoint
-    chunks (pigeonhole guarantees a candidate shares one), equality
-    self-join per band, then the exact JVM-side ``bit_count`` verify.
-    ``max_distance`` is capped at 3 (4 x 16-bit chunks): beyond that
-    the chunks stop pruning and the banded join degenerates toward the
-    cross product — the same honest boundary the text simhash tier
-    documents."""
-    if not 0 <= max_distance <= 3:
-        raise ValueError(
-            "max_distance must be 0..3 (16-bit bands stop pruning past "
-            f"that), got {max_distance}"
-        )
+    ``id_a < id_b``, from the banded self-join of
+    :func:`deva_spark.operators.neardup.hamming_candidates`.
+    ``max_distance`` is capped at 3 (4 x 16-bit bands): beyond that
+    the bands stop pruning and the join degenerates toward the cross
+    product."""
+    check_max_distance(max_distance)
     # Materialize the hash synopsis BEFORE the banded self-join (guide
     # §2.4/§5): both join branches hang off the same opaque Arrow stage
     # (decode + hash — for the registry tiers, image SYNTHESIS too), and
@@ -249,20 +211,4 @@ def hamming_neardup_pairs(
     # checkpoint's blocks belong to this result alone and the
     # ContextCleaner frees them once the result is dropped.
     hashes = hashes.localCheckpoint(eager=True)
-    sides = _banded(hashes, hash_col, id_col, max_distance)
-    a, b = sides.alias("a"), sides.alias("b")
-    cand = a.join(
-        b,
-        on=[
-            F.col("a._band") == F.col("b._band"),
-            F.col("a._chunk") == F.col("b._chunk"),
-            F.col("a._id") < F.col("b._id"),
-        ],
-    ).select(
-        F.col("a._id").alias("id_a"),
-        F.col("b._id").alias("id_b"),
-        F.bit_count(
-            F.col("a._h").bitwiseXOR(F.col("b._h"))
-        ).alias("distance"),
-    )
-    return _dedup_verified(cand, max_distance)
+    return _pairs(hashes, None, hash_col, id_col, max_distance)

@@ -13,22 +13,25 @@ the identical value with pure SQL arithmetic (no engine-specific hash).
 
 The fingerprint itself is a vectorized Arrow pandas UDF (hashlib + integer
 ops over a batch) — the one place Python earns its keep here; the banding
-join and Hamming verify are built-in column ops (``bit_count(a ^ b)``).
+join and Hamming verify are the column ops of
+:mod:`deva_spark.operators.neardup`, shared with the image and video tiers.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from deva_spark.operators.neardup import band, check_banding, hamming_candidates
+
 BITS = 48
 NUM_CHUNKS = 4  # k+1 chunks for Hamming k=3
-CHUNK_BITS = BITS // NUM_CHUNKS  # 12
 
 
 import numpy as np
@@ -84,57 +87,21 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def hamming(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def _chunk_spans(n_chunks: int) -> list[tuple[int, int]]:
-    """Contiguous ``(start_bit, width)`` spans partitioning the 48 bits
-    into ``n_chunks`` nearly-even chunks (the first ``BITS % n`` chunks
-    carry the extra bit). For the default ``NUM_CHUNKS`` this is exactly
-    the historical four 12-bit spans, so staged chunk projections stay
-    byte-identical."""
-    if not 1 <= n_chunks <= BITS:
-        raise ValueError(f"n_chunks must be in [1, {BITS}], got {n_chunks}")
-    base, rem = divmod(BITS, n_chunks)
-    out, start = [], 0
-    for i in range(n_chunks):
-        w = base + (1 if i < rem else 0)
-        out.append((start, w))
-        start += w
-    return out
-
-
 def chunk_keys(fps: DataFrame, n_chunks: int = NUM_CHUNKS) -> DataFrame:
     """Chunk projection of a fingerprint table: ``(doc_id, fp, ci,
     cv)`` rows, one per (doc, chunk index), with the chunk's bit-span
-    value as the bucket key. This is the simhash tier's stageable/
-    appendable index — a pure per-doc function of the fingerprint, so a
-    new batch's rows append to an existing table without any rebuild
-    (the band_keys / window-index contract). Rows carry ``fp`` so the
-    Hamming verify needs no second join.
+    value as the bucket key (:func:`deva_spark.operators.neardup.band`;
+    the default ``NUM_CHUNKS`` gives four 12-bit spans). This is the
+    simhash tier's stageable/appendable index — a pure per-doc function
+    of the fingerprint, so a new batch's rows append to an existing
+    table without any rebuild (the band_keys / window-index contract).
+    Rows carry ``fp`` so the Hamming verify needs no second join.
 
     ``n_chunks`` sets the banding (pigeonhole: ``n_chunks`` chunks cover
     Hamming budgets up to ``n_chunks - 1``). Tables joined on (ci, cv)
     must share the SAME ``n_chunks`` — the near-dup entry points derive
     it from ``max_hamming`` and say so."""
-    return fps.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright(F.col("fp"), start)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("cv"),
-                    )
-                    for i, (start, width) in enumerate(_chunk_spans(n_chunks))
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "fp", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
+    return band(fps, "fp", BITS, n_chunks, ["doc_id"])
 
 
 def banding_chunks(max_hamming: int) -> int:
@@ -144,8 +111,11 @@ def banding_chunks(max_hamming: int) -> int:
     bits landed one per chunk for any budget above 3 (r11 review) — the
     entry points now derive the banding from the budget, and the
     default budget keeps the historical 4x12-bit layout byte-identical
-    for staged projections."""
-    return min(BITS, max(NUM_CHUNKS, max_hamming + 1))
+    for staged projections. A budget of ``BITS`` or more has no such
+    banding (a pair may differ in every chunk) and raises."""
+    n_chunks = min(BITS, max(NUM_CHUNKS, max_hamming + 1))
+    check_banding(BITS, n_chunks, max_hamming)
+    return n_chunks
 
 
 def incremental_near_duplicates(
@@ -207,45 +177,23 @@ def incremental_near_duplicates(
         oc = old_chunks
     else:
         oc = chunk_keys(old_fps, n_chunks)
-    cross = (
-        nc.select(
-            F.col("doc_id").alias("nid"), F.col("fp").alias("nfp"), "ci", "cv"
-        )
-        .join(
-            oc.select(
-                F.col("doc_id").alias("oid"), F.col("fp").alias("ofp"), "ci", "cv"
-            ),
-            ["ci", "cv"],
-        )
-        .select(
-            F.least("nid", "oid").alias("id_a"),
-            F.greatest("nid", "oid").alias("id_b"),
-            hamming(F.col("nfp"), F.col("ofp")).alias("hd"),
-        )
+    cand = functools.partial(
+        hamming_candidates, id_col="doc_id", hash_col="fp", bits=BITS,
+        max_distance=max_hamming, n_bands=n_chunks,
     )
-    a = nc.select(
-        F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"), "ci", "cv"
+    cross = cand(nc, oc).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        "distance",
     )
-    b = nc.select(
-        F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b"), "ci", "cv"
-    )
-    self_pairs = (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", hamming(F.col("fp_a"), F.col("fp_b")).alias("hd")
-        )
-    )
-    return (
-        # verify BEFORE the dedup exchange (guide §2.3): failing
-        # candidates drop map-side, and the band-copy dedup is an
-        # aggregation over (id_a, id_b, hd) — hd is identical across a
-        # pair's band copies, so min() is exact
-        cross.unionByName(self_pairs)
-        .filter(F.col("hd") <= max_hamming)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hd").alias("hd"))
-    )
+    return _dedup(cross.unionByName(cand(nc)))
+
+
+def _dedup(cand: DataFrame) -> DataFrame:
+    """One ``(id_a, id_b, hd)`` row per verified candidate pair. The
+    verify already ran before this exchange, and every band copy of a
+    pair carries the same distance, so ``min`` is exact."""
+    return cand.groupBy("id_a", "id_b").agg(F.min("distance").alias("hd"))
 
 
 def near_duplicates(
@@ -270,23 +218,14 @@ def near_duplicates(
     text, the doc_sigs pattern; the caller owns its persistence). When
     omitted, fingerprints are computed and checkpointed here.
     """
+    n_chunks = banding_chunks(max_hamming)
     if fps is None:
         # Eager checkpoint: the pandas-UDF fingerprint pass feeds the
         # chunk explosion and both join sides; compute it once.
         fps = fingerprints(docs, id_col, text_col).localCheckpoint(eager=True)
-    chunks = chunk_keys(fps, banding_chunks(max_hamming))
-    a = chunks.select(
-        F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"), "ci", "cv"
-    )
-    b = chunks.select(
-        F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b"), "ci", "cv"
-    )
-    return (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming(F.col("fp_a"), F.col("fp_b")).alias("hd"))
-        # verify-before-dedup: see near_duplicates_join above
-        .filter(F.col("hd") <= max_hamming)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hd").alias("hd"))
+    return _dedup(
+        hamming_candidates(
+            fps, id_col="doc_id", hash_col="fp", bits=BITS,
+            max_distance=max_hamming, n_bands=n_chunks,
+        )
     )

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deva_spark.functions.text import words
+from deva_spark.operators.neardup import ordered_pairs
 
 def window_runs(text: Column, window: int) -> Column:
     """Array of all length-``window`` consecutive word runs of ``text``
@@ -176,16 +177,9 @@ def substring_dup_pairs_from_groups(
         g = g.filter(F.size("ids") <= df_cap)
     pairs = g.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda b: F.struct(
-                            a.alias("id_a"), b.alias("id_b")
-                        ),
-                    ),
-                )
+            ordered_pairs(
+                F.col("ids"),
+                lambda a, b: F.struct(a.alias("id_a"), b.alias("id_b")),
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b")
@@ -384,22 +378,17 @@ def longest_common_run_from_groups(
         g = g.filter(F.size("dps") <= df_cap)
     m = g.select(
         F.explode(
-            F.flatten(
-                F.transform(
+            F.filter(
+                ordered_pairs(
                     F.col("dps"),
-                    lambda a, i: F.filter(
-                        F.transform(
-                            F.slice(F.col("dps"), i + 2, F.size(F.col("dps"))),
-                            lambda b: F.struct(
-                                a["doc_id"].alias("id_a"),
-                                b["doc_id"].alias("id_b"),
-                                (a["pos"] - b["pos"]).alias("dd"),
-                                a["pos"].alias("pa"),
-                            ),
-                        ),
-                        lambda pr: pr["id_a"] < pr["id_b"],
+                    lambda a, b: F.struct(
+                        a["doc_id"].alias("id_a"),
+                        b["doc_id"].alias("id_b"),
+                        (a["pos"] - b["pos"]).alias("dd"),
+                        a["pos"].alias("pa"),
                     ),
-                )
+                ),
+                lambda pr: pr["id_a"] < pr["id_b"],
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b", "p.dd", "p.pa")

@@ -18,9 +18,9 @@ aligned 64-bit coincidences.
 
 Scale shape (identical to the image tier, per frame instead of per
 image): hashing is one Arrow pass (decode + dhash per sampled frame, no
-shuffle); matching shuffles (band, 16-bit chunk) keys — the k+1
-pigeonhole banding of :mod:`imagehash` — then two aggregations on
-candidate pair keys (per-offset count, per-pair max). Nothing is
+shuffle); matching is the banded Hamming join of
+:mod:`deva_spark.operators.neardup` on per-frame hashes, then two
+aggregations on candidate pair keys (per-offset count, per-pair max). Nothing is
 all-pairs; the incremental variant joins batch-vs-staged-corpus only.
 
 Reference parity: the reference has no video operators at all (its
@@ -37,8 +37,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from deva_spark.functions.imagehash import dhash64
+from deva_spark.functions.imagehash import check_max_distance, dhash64
 from deva_spark.functions.multimodal import decode_avi
+from deva_spark.operators.neardup import hamming_candidates
 
 
 def video_frame_hashes(
@@ -81,99 +82,47 @@ def video_frame_hashes(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def _frame_banded(
-    fh: DataFrame, id_col: str, frame_col: str, max_distance: int
-) -> DataFrame:
-    """(video, frame, hash) exploded over the k+1 disjoint 16-bit
-    chunks — the pigeonhole banding of imagehash._banded, carrying the
-    frame index through."""
-    n_chunks = max_distance + 1
-    width = 64 // n_chunks
-    mask = (1 << width) - 1 if width < 64 else -1
-    h = F.col("dhash")
-    chunks = F.array(
-        *[
-            F.shiftrightunsigned(h, i * width).bitwiseAND(F.lit(mask))
-            for i in range(n_chunks)
-        ]
-    )
-    return fh.select(
-        F.col(id_col).alias("_vid"),
-        F.col(frame_col).alias("_fid"),
-        h.alias("_h"),
-        F.posexplode(chunks).alias("_band", "_chunk"),
-    )
-
-
 def _validate(max_distance: int, threshold: int, threshold_name: str) -> None:
-    if not 0 <= max_distance <= 3:
-        raise ValueError(
-            "max_distance must be 0..3 (16-bit bands stop pruning past "
-            f"that), got {max_distance}"
-        )
+    check_max_distance(max_distance)
     if threshold < 1:
         raise ValueError(
             f"{threshold_name} must be >= 1, got {threshold}"
         )
 
 
-def _frame_candidates(
-    a: DataFrame, b: DataFrame, ordered: bool
+def _frame_matches(
+    a: DataFrame,
+    b: DataFrame | None,
+    id_col: str,
+    frame_col: str,
+    max_distance: int,
 ) -> DataFrame:
-    """Banded equality join of two (pre-banded) frame-hash sides ->
-    candidate frame pairs ``(id_a, id_b, _fa, _fb, _ha, _hb)``.
-    ``ordered`` adds ``id_a < id_b`` (the self-join form); the
-    cross-table form instead EXCLUDES equal ids — a video whose frame
-    hashes sit in both corpus and batch (a re-submitted batch, a
-    rebuilt staged table) must not report itself as its own duplicate
-    (review r14)."""
-    a, b = a.alias("a"), b.alias("b")
-    on = [
-        F.col("a._band") == F.col("b._band"),
-        F.col("a._chunk") == F.col("b._chunk"),
-        F.col("a._vid") < F.col("b._vid")
-        if ordered
-        else F.col("a._vid") != F.col("b._vid"),
-    ]
-    return a.join(b, on=on).select(
-        F.col("a._vid").alias("id_a"),
-        F.col("b._vid").alias("id_b"),
-        F.col("a._fid").alias("_fa"),
-        F.col("b._fid").alias("_fb"),
-        F.col("a._h").alias("_ha"),
-        F.col("b._h").alias("_hb"),
+    """Verified frame matches ``(id_a, id_b, _fa, _fb)`` from the banded
+    dhash join (self form when ``b`` is None). Band copies of a frame
+    pair are still present as identical rows; the aggregations
+    downstream dedup them with ``count_distinct`` instead of a separate
+    ``dropDuplicates`` exchange."""
+    return hamming_candidates(
+        a, b, id_col=id_col, hash_col="dhash", bits=64,
+        max_distance=max_distance, carry=[frame_col],
+    ).select(
+        "id_a",
+        "id_b",
+        F.col(f"{frame_col}_a").alias("_fa"),
+        F.col(f"{frame_col}_b").alias("_fb"),
     )
 
 
-def _verified_matches(cand: DataFrame, max_distance: int) -> DataFrame:
-    """Exact JVM-side verify, BEFORE any exchange (guide §2.3): the
-    ``bit_count`` filter drops failing candidates map-side — up to k+1
-    band copies per frame pair never shuffle. Band copies of a
-    SURVIVING frame pair are still present (identical rows); the
-    downstream aggregations dedup them with ``count_distinct`` instead
-    of a separate ``dropDuplicates`` exchange that would carry the two
-    8-byte hashes per row."""
-    return cand.filter(
-        F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))) <= max_distance
-    )
-
-
-def _aligned_pairs(
-    cand: DataFrame, max_distance: int, min_aligned: int
-) -> DataFrame:
-    """Candidate frame matches -> temporally aligned video pairs.
-
-    Verify is JVM-side ``bit_count`` on the deduped candidates; then
-    the TEMPORAL step: group matches by (pair, offset = frame_b -
+def _aligned_pairs(matches: DataFrame, min_aligned: int) -> DataFrame:
+    """Verified frame matches -> temporally aligned video pairs. The
+    TEMPORAL step: group matches by (pair, offset = frame_b -
     frame_a) and keep the pair's best-supported offset. A re-encode
     matches at offset 0, a head-trim of t frames at offset -t; unrelated
     videos would need ``min_aligned`` independent <=``max_distance``-bit
     64-bit coincidences AT THE SAME OFFSET (P ~ (2.4e-15)^min_aligned
     per offset) — the alignment is what turns frame-level noise
     tolerance into video-level selectivity."""
-    matches = _verified_matches(cand, max_distance).withColumn(
-        "offset", F.col("_fb") - F.col("_fa")
-    )
+    matches = matches.withColumn("offset", F.col("_fb") - F.col("_fa"))
     # count_distinct: band copies of one frame match collapse here (the
     # offset fixes _fb given _fa, so distinct _fa == distinct matches)
     per_offset = matches.groupBy("id_a", "id_b", "offset").agg(
@@ -202,13 +151,11 @@ def video_neardup_pairs(
 ) -> DataFrame:
     """All video pairs sharing ``min_aligned`` or more frame matches at
     one temporal offset — ``(id_a, id_b, aligned, offset)`` with
-    ``id_a < id_b``. Frame matches come from the k+1-chunk banded
-    self-join (pigeonhole: hamming <= ``max_distance`` implies one equal
-    16-bit chunk) + exact ``bit_count`` verify, exactly the image-tier
-    discipline per frame; the offset vote then enforces temporal
-    consistency (see :func:`_aligned_pairs`). ``max_distance`` caps at
-    3 for the same honest reason as imagehash: wider radii stop pruning
-    in 16-bit bands."""
+    ``id_a < id_b``. Frame matches come from the banded Hamming
+    self-join of :mod:`deva_spark.operators.neardup`, as in the image
+    tier; the offset vote then enforces temporal consistency (see
+    :func:`_aligned_pairs`). ``max_distance`` caps at 3, as in
+    imagehash: wider radii stop pruning in 16-bit bands."""
     _validate(max_distance, min_aligned, "min_aligned")
     # Materialize the frame-hash synopsis BEFORE the banded self-join
     # (guide §2.4/§5): both branches hang off the same opaque Arrow
@@ -219,10 +166,8 @@ def video_neardup_pairs(
     # eager local checkpoint, freed with the result (the
     # imagehash.hamming_neardup_pairs contract).
     frame_hashes = frame_hashes.localCheckpoint(eager=True)
-    sides = _frame_banded(frame_hashes, id_col, frame_col, max_distance)
     return _aligned_pairs(
-        _frame_candidates(sides, sides, ordered=True),
-        max_distance,
+        _frame_matches(frame_hashes, None, id_col, frame_col, max_distance),
         min_aligned,
     )
 
@@ -250,9 +195,8 @@ def video_neardup_unordered(
     _validate(max_distance, min_shared, "min_shared")
     # same materialize-before-self-join contract as video_neardup_pairs
     frame_hashes = frame_hashes.localCheckpoint(eager=True)
-    sides = _frame_banded(frame_hashes, id_col, frame_col, max_distance)
-    matches = _verified_matches(
-        _frame_candidates(sides, sides, ordered=True), max_distance
+    matches = _frame_matches(
+        frame_hashes, None, id_col, frame_col, max_distance
     )
     return (
         matches.groupBy("id_a", "id_b")
@@ -280,8 +224,7 @@ def video_neardup_join(
     present in both tables (a re-submitted batch after the staged
     corpus was rebuilt) is already-known, not its own duplicate."""
     _validate(max_distance, min_aligned, "min_aligned")
-    a = _frame_banded(corpus, id_col, frame_col, max_distance)
-    b = _frame_banded(batch, id_col, frame_col, max_distance)
     return _aligned_pairs(
-        _frame_candidates(a, b, ordered=False), max_distance, min_aligned
+        _frame_matches(corpus, batch, id_col, frame_col, max_distance),
+        min_aligned,
     )

@@ -353,9 +353,7 @@ def _pruned_pair_index(idx: DataFrame, key: str) -> DataFrame:
     as subpos8g's group rewrite. File-count shaping (keeping the staged
     table from being 32 near-empty files whose open/footer overhead
     dominates the timed read) happens at STAGING-WRITE time via
-    ``ARTIFACT_WRITE_PARTITIONS`` — not here: a ``coalesce`` in the
-    logical plan propagates upward and collapses this count aggregate
-    and join to 8 tasks on the inline-fallback route (ADVICE r10)."""
+    ``ARTIFACT_WRITE_PARTITIONS``, not here."""
     dup = (
         idx.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_c"))

@@ -14,6 +14,7 @@ from deva_spark.functions import text as T
 from deva_spark.functions import vectors as V
 from deva_spark.operators import windows
 from deva_spark.operators.aggregates import money_sum
+from deva_spark.operators.neardup import ordered_pairs
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from deva_spark.queries._infra import (
@@ -790,23 +791,12 @@ def x55(spark, sf):
     # the staged index is already per-shingle sorted source arrays —
     # the timed query is scan → pair-explode → pair aggregate
     srcs = _shared_artifact(spark, sf, "shingle5_src")
-    n = F.size("_srcs")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.transform(
-                # length = full remaining tail (ADVICE r5: a literal cap
-                # silently truncated pairs past ~1001 sources per shingle)
-                F.slice(F.col("_srcs"), (i + 2).cast("int"), F.size("_srcs")),
-                lambda s: F.struct(
-                    F.element_at(F.col("_srcs"), (i + 1).cast("int")).alias("src_a"),
-                    s.alias("src_b"),
-                ),
-            ),
-        )
+    pairs = ordered_pairs(
+        F.col("_srcs"),
+        lambda a, b: F.struct(a.alias("src_a"), b.alias("src_b")),
     )
     return (
-        srcs.filter(n >= 2)
+        srcs.filter(F.size("_srcs") >= 2)
         .select(F.explode(pairs).alias("_p"))
         .groupBy(
             F.col("_p.src_a").alias("src_a"), F.col("_p.src_b").alias("src_b")

@@ -16,7 +16,6 @@ per-trigger lossy-latest semantics.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,13 +61,12 @@ def _stage_chunks(
 
 
 def stage_event_chunks(
-    spark: SparkSession, sf_dir: str, chunks: int = 4, out_dir: str | None = None
+    spark: SparkSession, sf_dir: str, chunks: int = 4, *, out_dir: str
 ) -> str:
     """Replay staging (``DBStream.replay`` analog): split the events table
     into ``chunks`` parquet files in (ts, event_id) order so the file-stream
     source discovers them as successive micro-batches (see
     :func:`_stage_chunks`)."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_stream_")
     ev = read_table(spark, sf_dir, "events")
     return _stage_chunks(ev, chunks, ["ts", "event_id"], out_dir)
 
@@ -83,7 +81,8 @@ def stage_doc_chunks(
     sf_dir: str,
     chunks: int = 3,
     where: str = "doc_id % 10 = 0",
-    out_dir: str | None = None,
+    *,
+    out_dir: str,
 ) -> str:
     """Stage the NEW-batch slice of the documents table (``where`` — the
     x77/x78 batch simulation; default is the scale-invariant 10% modular
@@ -91,7 +90,6 @@ def stage_doc_chunks(
     replays the batch arriving incrementally. Same anatomy as
     :func:`stage_event_chunks`: range-partitioned distributed write,
     driver touches only file metadata (rename + monotonic mtimes)."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_docstream_")
     docs = read_table(spark, sf_dir, "documents").filter(F.expr(where))
     return _stage_chunks(docs, chunks, ["doc_id"], out_dir)
 
@@ -392,12 +390,12 @@ def stage_emb_chunks(
     sf_dir: str,
     chunks: int = 3,
     min_id: int = 0,
-    out_dir: str | None = None,
+    *,
+    out_dir: str,
 ) -> str:
     """Embedding-arrival staging (the stage_doc_chunks pattern on the
     vector side): split ``embeddings`` rows with ``vec_id >= min_id``
     into ``chunks`` files in vec_id order for file-stream replay."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_emb_stream_")
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") >= min_id
     )

@@ -105,7 +105,10 @@ def main() -> None:
 
     # 2. the same new x old counts via a streaming drain (x78):
     #    identical under any micro-batching — counts decompose
-    chunks = twin.stage_doc_chunks(spark, sf_dir, chunks=3, min_id=cut)
+    chunks = twin.stage_doc_chunks(
+        spark, sf_dir, chunks=3, where=f"doc_id >= {cut}",
+        out_dir=f"{work}/doc_chunks",
+    )
     stream = twin.docs_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         twin.streaming_incremental_pairs(stream, old_idx, window=8),

@@ -6,6 +6,7 @@ Run: python examples/streaming_twin.py [sf_dir]
 
 import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -19,7 +20,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("example-streaming", cpus=8)
 
-    staged = twin.stage_event_chunks(spark, sf_dir, chunks=4)
+    staged = twin.stage_event_chunks(
+        spark, sf_dir, chunks=4, out_dir=tempfile.mkdtemp(prefix="deva_stream_")
+    )
     try:
         # tumbling event-time window with a watermark
         s = twin.events_file_stream(spark, staged)

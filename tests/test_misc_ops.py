@@ -20,8 +20,8 @@ SLOW = settings(
 )
 
 
-def test_sliding_time_window_stream_equivalence(spark, sf_dir):
-    staged = twin.stage_event_chunks(spark, sf_dir, chunks=3)
+def test_sliding_time_window_stream_equivalence(spark, sf_dir, tmp_path):
+    staged = twin.stage_event_chunks(spark, sf_dir, chunks=3, out_dir=str(tmp_path))
     import shutil
 
     try:
@@ -663,7 +663,7 @@ def test_batch_drift_gate(spark):
     assert z1 == z2
 
 
-def test_streaming_stats_partials_equivalence(spark, sf_dir):
+def test_streaming_stats_partials_equivalence(spark, sf_dir, tmp_path):
     # the stats tier's STREAMING twin needs no new operator:
     # stats_partials is a plain aggregate transform, so it runs on a
     # file stream directly; a complete-mode AvailableNow drain equals
@@ -672,7 +672,9 @@ def test_streaming_stats_partials_equivalence(spark, sf_dir):
     from deva_spark.functions import text as T
     from deva_spark.operators import aggregates as agg
 
-    chunks = twin.stage_doc_chunks(spark, sf_dir, chunks=4, where="TRUE")
+    chunks = twin.stage_doc_chunks(
+        spark, sf_dir, chunks=4, where="TRUE", out_dir=str(tmp_path)
+    )
     stream = twin.docs_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         stream.select("lang", T.token_count(F.col("text")).alias("v"))

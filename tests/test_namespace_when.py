@@ -27,8 +27,8 @@ def test_namespace_view_and_table(spark, sf_dir):
         assert "ns_durable" in ns.names()
 
 
-def test_when_then_trigger(spark, sf_dir):
-    staged = twin.stage_event_chunks(spark, sf_dir, chunks=2)
+def test_when_then_trigger(spark, sf_dir, tmp_path):
+    staged = twin.stage_event_chunks(spark, sf_dir, chunks=2, out_dir=str(tmp_path))
     try:
         s = twin.events_file_stream(spark, staged)
         fired = []

@@ -555,3 +555,37 @@ def test_kmv_null_filter_pushes_to_scan(plans):
     assert any("user_id" in ln for ln in pushed)
     cond = [ln for ln in p.splitlines() if "Condition" in ln and "md5" in ln]
     assert not cond, cond[:1]
+
+
+#: ``(Exchange, MapInPandas)`` node counts in the executed plan of each
+#: pair-forming entry at sf0.001: the banded-Hamming tiers (x07, x82,
+#: x115, x117, x118, x119, x122, x123) and the in-array pair explodes
+#: (x55, x74, x75, x116). A change to the shared pair primitives may
+#: lower a count; raising one is a plan regression.
+_PAIR_PLAN_COUNTS = {
+    "x07_simhash_neardup": (2, 0),
+    "x55_cross_source_overlap": (1, 0),
+    "x74_substring_dup_pairs": (1, 0),
+    "x75_longest_common_run": (2, 0),
+    "x82_incremental_simhash_neardup": (3, 0),
+    "x115_image_neardup_pairs": (3, 0),
+    "x116_audio_neardup_pairs": (4, 2),
+    "x117_incremental_image_neardup": (4, 2),
+    "x118_video_neardup_pairs": (5, 0),
+    "x119_incremental_video_neardup": (6, 2),
+    "x122_multimodal_dedup_clusters": (5, 0),
+    "x123_resampled_video_neardup": (4, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_PLAN_COUNTS))
+def test_pair_forming_plan_counts(plans, name):
+    import re
+
+    p = plans(name)
+    counts = (
+        len(re.findall(r"\b\w*Exchange\b", p)),
+        len(re.findall(r"\bMapInPandas\b", p)),
+    )
+    exchanges, map_in_pandas = _PAIR_PLAN_COUNTS[name]
+    assert counts[0] <= exchanges and counts[1] <= map_in_pandas, (counts, p)

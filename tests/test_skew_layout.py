@@ -188,7 +188,7 @@ def test_x98_staged_layout_matches_raw(spark, sf_dir):
     assert surv < total
 
 
-def test_streaming_cms_partials_equivalence(spark, sf_dir):
+def test_streaming_cms_partials_equivalence(spark, sf_dir, tmp_path):
     # the frequency tier's STREAMING twin costs no new operator (the
     # x84-stats argument): cms_partials is a plain algebraic aggregate,
     # so it runs on the event file stream directly and a complete-mode
@@ -200,7 +200,7 @@ def test_streaming_cms_partials_equivalence(spark, sf_dir):
     from deva_spark.streaming import twin
 
     depth, width = 4, 64
-    chunks = twin.stage_event_chunks(spark, sf_dir, chunks=3)
+    chunks = twin.stage_event_chunks(spark, sf_dir, chunks=3, out_dir=str(tmp_path))
     stream = twin.events_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         stream.transform(agg.cms_partials("event_type", depth, width)),
@@ -284,7 +284,7 @@ def test_salted_join_property_row_identical(spark, big_keys, dim_keys, n_salts, 
     assert salted == plain
 
 
-def test_streaming_cosine_pairs_matches_batch_incremental(spark, sf_dir):
+def test_streaming_cosine_pairs_matches_batch_incremental(spark, sf_dir, tmp_path):
     # the vector tier joins the streaming ring: an AvailableNow drain of
     # the stream-static bucket join + rescore equals the batch
     # incremental operator's new-x-old side, under any micro-batching
@@ -298,7 +298,9 @@ def test_streaming_cosine_pairs_matches_batch_incremental(spark, sf_dir):
     old_base.count()
     thr = 0.3  # low bar so the tiny SF yields non-empty pairs
 
-    chunks = twin.stage_emb_chunks(spark, sf_dir, chunks=3, min_id=cut)
+    chunks = twin.stage_emb_chunks(
+        spark, sf_dir, chunks=3, min_id=cut, out_dir=str(tmp_path)
+    )
     stream = twin.emb_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         twin.streaming_cosine_pairs(stream, old_base, threshold=thr),

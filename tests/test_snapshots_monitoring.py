@@ -571,7 +571,7 @@ def test_decimal_stats_prune_numerically_not_lexicographically(spark, tmp_path):
         )
 
 
-def test_streaming_histogram_partials_equivalence(spark, sf_dir):
+def test_streaming_histogram_partials_equivalence(spark, sf_dir, tmp_path):
     # histogram_partials is a plain algebraic aggregate (the stats/CMS
     # argument), so the PSI gate's input runs directly on the doc file
     # stream; complete-mode drain == batch bucket rows under any
@@ -581,7 +581,9 @@ def test_streaming_histogram_partials_equivalence(spark, sf_dir):
     from deva_spark.streaming import twin
 
     grid = dict(lo=0.0, hi=500.0, n_buckets=20)
-    chunks = twin.stage_doc_chunks(spark, sf_dir, chunks=4, where="TRUE")
+    chunks = twin.stage_doc_chunks(
+        spark, sf_dir, chunks=4, where="TRUE", out_dir=str(tmp_path)
+    )
     stream = twin.docs_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         stream.select("lang", T.token_count(F.col("text")).alias("v"))
@@ -599,14 +601,16 @@ def test_streaming_histogram_partials_equivalence(spark, sf_dir):
     ) == _rows(batch.transform(agg.merge_histogram_partials(["lang"])))
 
 
-def test_streaming_quantile_partials_equivalence(spark, sf_dir):
+def test_streaming_quantile_partials_equivalence(spark, sf_dir, tmp_path):
     # quantile_partials is algebraic too: the sliding-quantile tier's
     # input drains identically on the doc stream
     from deva_spark.functions import text as T
     from deva_spark.session import read_table
     from deva_spark.streaming import twin
 
-    chunks = twin.stage_doc_chunks(spark, sf_dir, chunks=3, where="TRUE")
+    chunks = twin.stage_doc_chunks(
+        spark, sf_dir, chunks=3, where="TRUE", out_dir=str(tmp_path)
+    )
     stream = twin.docs_file_stream(spark, chunks, files_per_trigger=1)
     drained = twin.run_available_now(
         stream.select("lang", T.token_count(F.col("text")).alias("v"))

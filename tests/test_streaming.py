@@ -14,8 +14,10 @@ from deva_spark.streaming import stateful, twin
 
 
 @pytest.fixture(scope="module")
-def staged(spark, sf_dir):
-    d = twin.stage_event_chunks(spark, sf_dir, chunks=4)
+def staged(spark, sf_dir, tmp_path_factory):
+    d = twin.stage_event_chunks(
+        spark, sf_dir, chunks=4, out_dir=str(tmp_path_factory.mktemp("staged"))
+    )
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -152,7 +154,7 @@ def test_streaming_funnel_equivalence(spark, staged, batch_events):
     assert conv.count() == conv.select("user_id", "step").distinct().count()
 
 
-def test_streaming_incremental_dedup_equivalence(spark, sf_dir):
+def test_streaming_incremental_dedup_equivalence(spark, sf_dir, tmp_path):
     # x78: documents stream (new batch) x staged corpus index via
     # stream-static join + streaming count — the drained result must
     # equal the batch new-x-old pair computation regardless of how the
@@ -175,7 +177,10 @@ def test_streaming_incremental_dedup_equivalence(spark, sf_dir):
             # restrict to the cross (new x old) side the stream computes
             if r.id_a < threshold
         }
-        d = twin.stage_doc_chunks(spark, sf_dir, chunks=3, where=f"doc_id >= {threshold}")
+        d = twin.stage_doc_chunks(
+            spark, sf_dir, chunks=3, where=f"doc_id >= {threshold}",
+            out_dir=str(tmp_path),
+        )
         try:
             old = idx.filter(F.col("doc_id") < threshold)
             s = twin.docs_file_stream(spark, d, files_per_trigger=1)

@@ -13,7 +13,9 @@ from deva_spark.streaming import twin
 
 
 def test_checkpoint_restart_no_dupes_no_loss(spark, sf_dir, tmp_path):
-    staged = twin.stage_event_chunks(spark, sf_dir, chunks=6)
+    staged = twin.stage_event_chunks(
+        spark, sf_dir, chunks=6, out_dir=str(tmp_path / "staged")
+    )
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     try:
@@ -64,7 +66,9 @@ def test_funnel_state_survives_restart(spark, sf_dir, tmp_path):
     from deva_spark.streaming import stateful
 
     steps = ["signup", "view", "click", "purchase"]
-    staged = twin.stage_event_chunks(spark, sf_dir, chunks=6)
+    staged = twin.stage_event_chunks(
+        spark, sf_dir, chunks=6, out_dir=str(tmp_path / "staged")
+    )
     out_dir = str(tmp_path / "conv")
     ckpt = str(tmp_path / "ckpt")
     try:

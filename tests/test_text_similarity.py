@@ -875,7 +875,28 @@ def test_simhash_wide_budget_finds_spread_bit_pairs(spark):
     assert got4 == {(1, 2): 4}  # previously silently missed
     # default banding unchanged: 4 chunks, historical 12-bit spans
     assert sh.banding_chunks(3) == sh.NUM_CHUNKS == 4
-    assert sh._chunk_spans(4) == [(0, 12), (12, 12), (24, 12), (36, 12)]
+    spans = {r.ci: r.cv for r in sh.chunk_keys(fps.filter("doc_id = 1")).collect()}
+    assert spans == {i: (base >> (12 * i)) & 0xFFF for i in range(4)}
+
+
+def test_simhash_budget_without_covering_banding_raises(spark):
+    # banding_chunks caps at 48 chunks (one bit each), so a budget of 48
+    # bits has no pigeonhole banding: fps 0 and 2**48 - 1 (hd = 48)
+    # differ in every chunk and came back as no pair at all. The budget
+    # is now rejected instead of under-recalled.
+    import pytest
+
+    fps = spark.createDataFrame(
+        [(1, 0), (2, (1 << 48) - 1)], "doc_id long, fp long"
+    )
+    docs = spark.createDataFrame([(1, "x"), (2, "y")], "doc_id long, text string")
+    assert sh.near_duplicates(docs, max_hamming=47, fps=fps).collect() == []
+    with pytest.raises(ValueError, match="max_distance"):
+        sh.near_duplicates(docs, max_hamming=48, fps=fps)
+    with pytest.raises(ValueError, match="max_distance"):
+        sh.incremental_near_duplicates(
+            fps.filter("doc_id = 2"), fps.filter("doc_id = 1"), max_hamming=48
+        )
 
 
 def test_minhash_column_twin_nulls_short_docs(spark):
