@@ -309,6 +309,10 @@ def NW(  # noqa: N802 — reference name
 
 _NAMED: dict[str, PageServer] = {}
 
+#: Phases of a micro-batch's ``durationMs`` that ``/json/runtime`` reports:
+#: the offset and commit log writes, the sink write and the whole trigger.
+_BATCH_PHASES = ("walCommit", "commitOffsets", "addBatch", "triggerExecution")
+
 
 def admin_panel(
     server: PageServer,
@@ -324,7 +328,9 @@ def admin_panel(
     bounded snapshots, never in the data plane):
 
     - ``/json/runtime`` — Spark version/master/parallelism + active
-      STREAMING QUERIES (name, id, last progress rates) + the JVM's
+      STREAMING QUERIES (name, id, last progress rates, the last batch's
+      ``durationMs`` phases and each state operator's ``commitTimeMs``
+      and ``numRowsTotal``) + the JVM's
       generated-code compile counters (``codegen``:
       classes compiled and compile ms; a count that keeps rising on a
       repeating pipeline means the class cache evicts): the monitor
@@ -352,6 +358,18 @@ def admin_panel(
                     "active": q.isActive,
                     "batchId": p.get("batchId"),
                     "inputRowsPerSecond": p.get("inputRowsPerSecond"),
+                    "durationMs": {
+                        k: v
+                        for k, v in (p.get("durationMs") or {}).items()
+                        if k in _BATCH_PHASES
+                    },
+                    "stateOperators": [
+                        {
+                            "commitTimeMs": op.get("commitTimeMs"),
+                            "numRowsTotal": op.get("numRowsTotal"),
+                        }
+                        for op in p.get("stateOperators") or []
+                    ],
                 }
             )
         return {

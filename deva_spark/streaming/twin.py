@@ -167,11 +167,16 @@ def run_available_now(
     partition size), NOT inherited from the batch-scan parallelism
     default. Both mis-sizings are real: a 100 TB deployment wants HUNDREDS
     of state partitions (the session default would under-partition a
-    billion-key dedup), while a bounded replay drain wants a handful (at
-    the session default of 32, every micro-batch pays 32 state-store
-    opens/commits per stateful operator PER SIDE — measured 4x the total
-    drain wall-clock on the replay drains, pure fixed cost; results are
-    partition-count-invariant either way, which the oracle hash checks).
+    billion-key dedup), while a bounded replay drain wants a handful. A
+    state partition's fixed cost is its checkpoint files: in every
+    micro-batch each partition of each stateful operator writes a delta
+    file and Spark's checksum file for it, and Hadoop without its native
+    library forks an external command per permission change and link
+    lookup (2 per file with the session's checkpoint manager, 10 with
+    Spark's default; see :mod:`deva_spark.session`). At the old session
+    default of 32 partitions that fixed cost was 4x the total drain
+    wall-clock on the replay drains. Results are partition-count-invariant
+    either way, which the oracle hash checks.
     Scoped: the session value is restored after the drain. The drain is
     synchronous, so the override window is the drain itself; if batch
     queries are planned CONCURRENTLY on the same session, run the drain
@@ -180,13 +185,15 @@ def run_available_now(
     ``state_store_provider`` picks the state-store backend for THIS
     query (e.g. ``"rocksdb"`` or a full provider class name). Profiled
     at sf0.1 (VERDICT r11 #6): the drain floor is micro-batch COUNT
-    (planning + per-batch state commit — halving batches took x35 from
-    7.1 s to 4.2 s), not the HDFS-backed store, and RocksDB is a net
-    LOSS at replay-drain state sizes (native open/commit overhead,
-    +50-75%% measured) — so the default stays the in-memory HDFS
-    provider; a 100 TB deployment whose per-partition state exceeds
-    executor heap is what this knob is for (results are
-    provider-invariant, which the oracle hashes check)."""
+    (planning + per-batch checkpoint writes — halving batches took x35
+    from 7.1 s to 4.2 s), not the HDFS-backed store, and RocksDB is a net
+    LOSS at replay-drain state sizes (+50-75%% measured): its commits
+    write more checkpoint files, each paying the forked commands above
+    (a two-batch, 8-partition aggregation drain forks 139 ``chmod``
+    under RocksDB against 99 under the HDFS provider) — so the default
+    stays the in-memory HDFS provider; a 100 TB deployment whose
+    per-partition state exceeds executor heap is what this knob is for
+    (results are provider-invariant, which the oracle hashes check)."""
     spark = stream_df.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
     prov_key = "spark.sql.streaming.stateStore.providerClass"

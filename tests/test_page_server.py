@@ -146,6 +146,45 @@ def test_admin_panel_monitors_live_stream(server, spark, tmp_path):
         stream.stop()
 
 
+def test_admin_panel_reports_batch_phases_and_state(server, spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from deva_spark.sources.page import admin_panel
+
+    urls = admin_panel(server, spark)
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", 20).load()
+        .groupBy((F.col("value") % 3).alias("k")).count()
+        .writeStream.format("memory")
+        .queryName("admin_state_probe")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        import time as _t
+
+        phases = {"walCommit", "commitOffsets", "addBatch", "triggerExecution"}
+        deadline = _t.time() + 30
+        entry = {}
+        while _t.time() < deadline:
+            rt = json.loads(_get(urls["runtime"]))
+            entry = next(
+                (s for s in rt["streams"] if s["name"] == "admin_state_probe"), {}
+            )
+            ops = entry.get("stateOperators") or [{}]
+            if ops[0].get("numRowsTotal") and set(entry["durationMs"]) == phases:
+                break  # a batch with data has run
+            _t.sleep(0.3)
+        assert set(entry["durationMs"]) == phases, entry
+        assert all(v >= 0 for v in entry["durationMs"].values())
+        (op,) = entry["stateOperators"]
+        assert op["commitTimeMs"] >= 0
+        assert op["numRowsTotal"] == 3  # one state row per key
+    finally:
+        stream.stop()
+
+
 def test_get_routes_ignore_query_strings(spark):
     # r11 review: http.server's self.path carries the raw query string;
     # registered endpoints must still route with ?params.
